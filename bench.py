@@ -297,19 +297,6 @@ def main():
     n_hist = timed("traffic_pipeline", _pipeline)
     log(f"pipeline: {n_hist} hist rows in {timings['traffic_pipeline']}s")
 
-    # --- dict-path A/B: the pre-planet broadcast-dict kernel feed
-    # (planet_scale=False; the default run above IS planet mode now)
-    from traffic_engine_spark.config import EngineConfig
-
-    def _pipeline_dict():
-        _, samples_p = M.run_pipeline(
-            spark, images, tls, segs, jumpers, EngineConfig(planet_scale=False)
-        )
-        return S.histograms(samples_p).count()
-
-    n_hist_p = timed("traffic_pipeline_dict", _pipeline_dict)
-    log(f"pipeline(dict A/B): {n_hist_p} hist rows in {timings['traffic_pipeline_dict']}s")
-
     # --- HEADLINE: tile assignment over every image row -------------------
     n_tiles = timed("tile_assign", lambda: TI.assign_tiles(images).count())
     log(f"tiles: {n_tiles} rows in {timings['tile_assign']}s")

@@ -40,10 +40,6 @@ def main():
                     help="stage-resumable root (plans/checkpoint.py)")
     ap.add_argument("--fingerprint", default="v1",
                     help="input-version fingerprint for checkpoint resume")
-    ap.add_argument("--dict-kernel-feed", action="store_true",
-                    help="A/B fixture: the pre-planet broadcast-dict kernel "
-                         "feed (planet_scale=False; collects O(network) "
-                         "segment attrs to the driver — test scales only)")
     ap.add_argument("--anonymity-gate", action="store_true",
                     help="drop fixes in z11 tiles seen by <10 distinct traces (W3)")
     ap.add_argument("--offmap", action="store_true", help="emit OffMapTrace polylines")
@@ -59,10 +55,7 @@ def main():
 
     # spark-submit provides master/executors; only SQL knobs set here
     spark = SparkSession.builder.appName("traffic_engine_spark").getOrCreate()
-    cfg = EngineConfig(
-        planet_scale=not args.dict_kernel_feed,
-        apply_anonymity_gate=args.anonymity_gate,
-    )
+    cfg = EngineConfig(apply_anonymity_gate=args.anonymity_gate)
 
     images = spark.read.parquet(args.images)
     ways = spark.read.parquet(args.ways)

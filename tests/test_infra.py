@@ -598,42 +598,34 @@ def test_streaming_histograms_merge_store(spark, spark_network, images_pd, tmp_p
 
 
 def test_planet_mode_pipeline_identical_no_collect(spark, spark_network, images_pd, monkeypatch):
-    """cfg.planet_scale must (a) produce bit-identical speed samples and
-    (b) never .collect() O(network) data to the driver — asserted by
-    poisoning DataFrame.collect for the duration of the planet run."""
+    """Building and running the pipeline must never .collect() O(network)
+    data to the driver — asserted by poisoning DataFrame.collect while the
+    plan is built and executed — and the kernel stays exactly one Python
+    stage.  Sample values are pinned against the oracle by
+    test_parity::test_samples_exact_including_float_speeds and
+    test_crossing_state_machine_random_fuzz."""
     from pyspark.sql import DataFrame as SparkDF
-
-    from traffic_engine_spark.config import EngineConfig
 
     segs, tls, jumpers_pd = spark_network
     images = spark.createDataFrame(images_pd)
-
-    # dict path is the A/B fixture now that planet_scale is the default
-    base_cfg = EngineConfig(planet_scale=False)
-    _, samples_dict = M.run_pipeline(spark, images, tls, segs, jumpers_pd, base_cfg)
-    a = samples_dict.toPandas()
-
-    planet_cfg = EngineConfig()  # default IS planet mode — assert that below
     orig_collect = SparkDF.collect
 
     def poisoned(self, *args, **kwargs):
-        raise AssertionError("planet_scale path must not collect() to the driver")
+        raise AssertionError("the pipeline must not collect() to the driver")
 
-    assert planet_cfg.planet_scale, "planet_scale must be the default config"
     monkeypatch.setattr(SparkDF, "collect", poisoned)
     try:
-        _, samples_planet = M.run_pipeline(spark, images, tls, segs, jumpers_pd, planet_cfg)
-        plan = samples_planet._jdf.queryExecution().executedPlan().toString()
+        _, samples = M.run_pipeline(spark, images, tls, segs, jumpers_pd)
+        plan = samples._jdf.queryExecution().executedPlan().toString()
+        n = samples.count()
     finally:
         monkeypatch.setattr(SparkDF, "collect", orig_collect)
-    b = samples_planet.toPandas()
-
-    key = ["trace_id", "segment_id", "time", "speed", "source"]
-    a = a[key].sort_values(key).reset_index(drop=True)
-    b = b[key].sort_values(key).reset_index(drop=True)
-    assert len(a) > 0
-    pd.testing.assert_frame_equal(a, b, check_exact=True)
-    assert "MapInPandas" in plan  # still exactly one Python stage
+    assert n > 0
+    # exactly one Python stage in the match pipeline (the network build's
+    # own stages sit below it in the plan): the J3 kernel, whose output
+    # carries prev_seg
+    kernels = [ln for ln in plan.splitlines() if "MapInPandas" in ln and "prev_seg" in ln]
+    assert len(kernels) == 1
 
 
 def test_jumper_dim_broadcast_gate(spark, spark_network, images_pd):

@@ -70,7 +70,6 @@ class EngineConfig:
     geodesy: str = "wgs84"           # "wgs84" (geotools/Vincenty parity) | "sphere"
     convert_to_localtime: bool = True  # GPSPoint.convertToLocaltime (GPSPoint.java:22)
     apply_anonymity_gate: bool = False  # MINIMUM_VEHICLE_COUNT cell gating (W3)
-    shuffle_partitions: int = 32
     # Skew handling: cells holding more than this fraction of candidate rows
     # get salted into `salt_buckets` sub-keys before the J1 join.
     skew_cell_fraction: float = 0.05
@@ -79,17 +78,6 @@ class EngineConfig:
     # cells explicitly via plans/skew.salted_join before the candidate
     # join.  AQE skew-split remains the runtime backstop either way.
     salt_smj_hot_cells: bool = True
-    # Column-pruning guard: never carry `bytes` through shuffles (SURVEY §7.4.5)
-    carry_payload: bool = False
-    # Planet-scale mode (DEFAULT): no O(network) driver collects anywhere —
-    # segment attrs ride the crossing rows (one extra equi-join, wider
-    # Arrow boundary) instead of driver-built broadcast dicts.
-    # Output-identical to the dict path (test_infra poisoned-collect test)
-    # and measured equal-or-FASTER warm at sf0.1/32 cores (3.7 s vs
-    # 4.3 s — building the dicts on the driver costs more than the extra
-    # broadcast join).  The dict path survives as planet_scale=False, a
-    # test/A-B fixture only: at 10⁸ segments it dies on driver memory.
-    planet_scale: bool = True
     # Dimension tables at or below this row count get an explicit
     # broadcast hint where the fact side has no plan-time statistics
     # (e.g. kernel mapInPandas output): AQE's runtime SMJ->BHJ conversion

@@ -33,7 +33,7 @@ from ..functions.viterbi import (
     point_segment_dist_m_np,
     viterbi_decode_batch_np,
 )
-from .match import memo_rowcount
+from ..util import memo_rowcount
 
 MATCH_SCHEMA = (
     "trace_id long, seq long, ts long, segment_id long, dist_m double"
@@ -72,7 +72,7 @@ def _pruned_candidates(
     # sort-merge and shuffles the whole fix side — the same
     # no-stats-on-the-fact-side trap as the seg-dim gate in plans/match
     # (cfg.broadcast_dim_max_rows).  The count is memoised per segments
-    # DataFrame (plans/match.memo_rowcount), shared with that gate.
+    # DataFrame (util.memo_rowcount), shared with that gate.
     # ~13 cover rows/segment (bbox ±1 ring): stay under the dim cap
     if memo_rowcount(segments) * 13 <= cfg.broadcast_dim_max_rows:
         cover = F.broadcast(cover)

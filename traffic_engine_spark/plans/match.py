@@ -20,6 +20,9 @@ Hot-path discipline:
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -28,7 +31,6 @@ from pyspark.sql import types as T
 from ..config import (
     DEFAULT_CONFIG,
     EngineConfig,
-    INTERSECTION_MARGIN_METERS,
     MAX_PAIR_DELTA_MS_FIXED,
     MAX_PAIR_DELTA_MS_QUIRK,
     MAX_SPEED,
@@ -38,9 +40,9 @@ from ..config import (
     Z_ITEM,
 )
 from ..functions.binning import coerce_ms_col
-from ..util import memo_rowcount  # noqa: F401  (re-export; historical import site)
 from ..functions.ids import tripline_id_py
 from ..functions.cells import explode_bbox_cover, pack_xy, tile_x_col, tile_y_col
+from ..util import memo_rowcount
 
 # ---------------------------------------------------------------------------
 # stage 1 — geotag decode (caption is authoritative; FIXTURES.md §1)
@@ -302,10 +304,6 @@ SAMPLE_SCHEMA = T.StructType(
 )
 
 
-# memo_rowcount moved to util.py (needed outside plans/); re-exported here
-# because every size-gated call site historically imports it from match.
-
-
 def _jumpers_sdf(spark: SparkSession, jumpers) -> DataFrame:
     """The jumper dim as a Spark DataFrame — `build_network_tables` hands
     back pandas below `cfg.jumper_fold_max_rows` and the sharded Spark
@@ -320,13 +318,75 @@ def _jumpers_sdf(spark: SparkSession, jumpers) -> DataFrame:
     )
 
 
-def _jumpers_pd(jumpers) -> pd.DataFrame:
-    """pandas view of the jumper dim — ONLY for the broadcast-dict path
-    (planet_scale=False), which is city-scale by contract; the collect here
-    is bounded by the same contract that allows the segment collect."""
-    if isinstance(jumpers, pd.DataFrame):
-        return jumpers
-    return jumpers.toPandas()
+# the J3 kernel's output, batch and streaming alike: one row per emitted
+# crossing sample, carrying the previous emission (prev_seg, prev_time;
+# -1/0 before the trace's first) for the declarative J4 pass
+CROSS_SAMPLE_SCHEMA = T.StructType(
+    [
+        T.StructField("trace_id", T.LongType(), False),
+        T.StructField("segment_id", T.LongType(), False),
+        T.StructField("time", T.LongType(), False),
+        T.StructField("speed", T.DoubleType(), False),
+        T.StructField("end_time", T.LongType(), False),
+        T.StructField("prev_seg", T.LongType(), False),
+        T.StructField("prev_time", T.LongType(), False),
+    ]
+)
+
+
+# Per-worker memo of the pending tie-break's tripline id: the id is the md5
+# of (segment_id, index) — how plans/network.py builds it — so the kernel
+# recomputes it instead of shipping it, and a worker sees each tripline of
+# the segments its traces cross many times.
+_tripline_id = functools.lru_cache(maxsize=1 << 16)(tripline_id_py)
+
+
+def pair_crossings(times, segs, idxs, dists, state, out):
+    """J3 — Vehicle's pending-crossing state machine (Vehicle.java:139-170)
+    over consecutive crossings of ONE trace, in scan order: the parallel
+    sequences ``times``/``segs``/``idxs``/``dists`` are each crossing's
+    time, segment_id, tripline_index and dist.
+
+    ``state`` is ``(pending, last_seg, last_time)``: pending crossings as
+    (time, tripline_id, segment_id, index, dist) tuples, and the segment
+    and sample time of the trace's last emitted sample (-1 and 0 before
+    the first).  A trace starts from ``([], -1, 0)``.  Every sample appends
+    (segment_id, time, speed, end_time, prev_seg, prev_time) to the six
+    lists of ``out``.  Returns the state after the last crossing: feeding
+    a trace in consecutive pieces, state carried, emits exactly what
+    feeding it whole does — the batch kernel relies on that at Arrow-batch
+    boundaries and the streaming kernel at micro-batch boundaries.
+
+    Called once per run of rows, never per row (the loop is the cost)."""
+    pending, last_seg, last_time = state
+    pending = list(pending)
+    o_seg, o_time, o_speed, o_end, o_pseg, o_ptime = out
+    for c_time, c_seg, c_idx, c_dist in zip(times, segs, idxs, dists):
+        last_crossing = None
+        if pending:
+            it = pending if len(pending) == 1 else sorted(pending)
+            for pc in it:
+                if pc[2] == c_seg and pc[3] <= c_idx and abs(pc[3] - c_idx) == 1:
+                    last_crossing = pc
+                    pending = []
+                    break
+        if c_idx == 1:
+            pending.append((c_time, _tripline_id(c_seg, c_idx), c_seg, c_idx, c_dist))
+        if last_crossing is None:
+            continue
+        if c_idx < last_crossing[3]:
+            continue  # wrong direction (Vehicle.java:221-224)
+        dt_s = (c_time - last_crossing[0]) // 1000
+        if dt_s == 0:
+            continue
+        speed = abs(c_dist - last_crossing[4]) / dt_s
+        if speed > MAX_SPEED:
+            continue
+        o_seg.append(c_seg); o_time.append(last_crossing[0]); o_speed.append(speed)
+        o_end.append(c_time); o_pseg.append(last_seg); o_ptime.append(last_time)
+        last_seg = c_seg
+        last_time = last_crossing[0]
+    return pending, last_seg, last_time
 
 
 def speed_samples(
@@ -335,275 +395,75 @@ def speed_samples(
     segments: DataFrame,
     jumpers_pd: pd.DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    repartition_input: bool = True,
 ) -> DataFrame:
-    """Partition-streaming kernel: repartition by trace_id +
-    sortWithinPartitions, then ONE mapInPandas pass that streams rows in
-    order, resetting state at trace boundaries.  Semantically identical to
-    a per-trace applyInPandas, but without the per-group pandas-frame
-    overhead (traces are small — grouped-map was ~20× slower at 64k
-    traces).  State carries across Arrow batch boundaries, so batch size
-    does not affect results.
+    """J3/J4: crossings → SAMPLE_SCHEMA speed samples, with NO
+    O(network) data collected to the driver.
 
-    Side inputs (segment endpoint nodes + jumpers) ship as broadcast dicts
-    at city scale; with ``cfg.planet_scale`` the per-segment attrs ride the
-    crossing rows via an equi-join instead (speed_samples_planet) so no
-    O(network) data is ever collected to the driver.  Jumpers stay a
-    broadcast dict in both modes — they cover only the short-segment sliver
-    (< MIN_SEGMENT_LEN) of the network, a bounded side input."""
-    if cfg.planet_scale:
-        return speed_samples_planet(spark, crossings, segments, jumpers_pd, cfg)
-    seg_nodes = {}
-    tl_attrs = {}  # packed (idx<<60 | segment_id) → (tripline_id, dist)
-    for r in segments.select(
-        "segment_id", "start_node_id", "end_node_id", "length_m"
-    ).collect():
-        sid = int(r.segment_id)
-        seg_nodes[sid] = (int(r.start_node_id), int(r.end_node_id))
-        if float(r.length_m) > MIN_SEGMENT_LEN:
-            tl_attrs[(1 << 60) | sid] = (tripline_id_py(sid, 1), INTERSECTION_MARGIN_METERS)
-            tl_attrs[(2 << 60) | sid] = (
-                tripline_id_py(sid, 2), float(r.length_m) - INTERSECTION_MARGIN_METERS,
-            )
-    jm = {
-        (int(r.start_node_id), int(r.end_node_id)): (float(r.length_m), [int(x) for x in r.segment_ids])
-        for r in _jumpers_pd(jumpers_pd).itertuples()
-    }
-    bc_seg = spark.sparkContext.broadcast(seg_nodes)
-    bc_tl = spark.sparkContext.broadcast(tl_attrs)
-    bc_jump = spark.sparkContext.broadcast(jm)
-
-    packed = F.shiftleft(F.col("tripline_index").cast("long"), 60) + F.col("segment_id")
-    arranged = crossings.select(
-        "trace_id", "seq", "time", "segment_id", "tripline_index",
-        "tripline_id", "tile_x", "tile_y", packed.alias("packed"),
-    )
-    if repartition_input:
-        # explicit partition count: AQE would coalesce by byte size and
-        # starve the Python stage of parallelism
-        n_part = spark.sparkContext.defaultParallelism * 4
-        arranged = arranged.repartition(n_part, "trace_id")
-    # else: the caller guarantees crossings are already hash-partitioned by
-    # trace_id — true by construction in run_pipeline, where the pairing
-    # window's exchange partitioning survives the narrow explode/join/refine
-    # chain; skipping the re-shuffle saves a full pass over the crossings
-    # (the 3rd of the pipeline's 3 exchanges)
-    arranged = (
-        arranged.sortWithinPartitions("trace_id", "seq", "time", "tile_x", "tile_y", "tripline_id")
-        # ordering established — project everything but the 3-column payload
-        # away so it never crosses the Arrow boundary
-        .select("trace_id", "time", "packed")
-    )
-
-    def run(batches):
-        seg_map, jump_map, tl_map = bc_seg.value, bc_jump.value, bc_tl.value
-        seg_mask = (1 << 60) - 1
-        state_trace = None
-        pending: list[tuple] = []
-        last_segment = None
-        last_segment_time = None
-        out_trace: list[int] = []
-        out_seg: list[int] = []
-        out_time: list[int] = []
-        out_speed: list[float] = []
-        out_src: list[str] = []
-        out_end: list[int] = []
-
-        for pdf in batches:
-            # tolist(): one C pass to native python scalars — per-element
-            # numpy→int conversion in the loop is ~3× slower
-            tr = pdf["trace_id"].to_numpy().tolist()
-            tm = pdf["time"].to_numpy().tolist()
-            pk = pdf["packed"].to_numpy().tolist()
-            for i in range(len(tr)):
-                trace = tr[i]
-                if trace != state_trace:
-                    state_trace = trace
-                    pending = []
-                    last_segment = None
-                    last_segment_time = None
-                c_time = tm[i]
-                p = pk[i]
-                c_seg = p & seg_mask
-                c_idx = p >> 60
-                c_tlid, c_dist = tl_map[p]
-                last_crossing = None
-                if pending:
-                    it = pending if len(pending) == 1 else sorted(pending)
-                    for pc in it:
-                        if pc[2] == c_seg and pc[3] <= c_idx and abs(pc[3] - c_idx) == 1:
-                            last_crossing = pc
-                            pending = []
-                            break
-                if c_idx == 1:
-                    pending.append((c_time, c_tlid, c_seg, c_idx, c_dist))
-                if last_crossing is None:
-                    continue
-                if c_idx < last_crossing[3]:
-                    continue  # wrong direction (Vehicle.java:221-224)
-                dt_s = (c_time - last_crossing[0]) // 1000  # Java long division
-                if dt_s == 0:
-                    continue
-                speed = abs(c_dist - last_crossing[4]) / dt_s
-                if speed > MAX_SPEED:
-                    continue
-                sample_time = last_crossing[0]
-                cur_nodes = seg_map.get(c_seg)
-                if cur_nodes is not None and last_segment is not None and last_segment[1] != cur_nodes[0]:
-                    jmp = jump_map.get((last_segment[1], cur_nodes[0]))
-                    if jmp is not None:
-                        dtj = (sample_time - last_segment_time) // 1000
-                        jspeed = (jmp[0] + MIN_SEGMENT_LEN * 2) / dtj if dtj != 0 else float("inf")
-                        for sid in jmp[1]:
-                            out_trace.append(trace); out_seg.append(sid)
-                            out_time.append(sample_time); out_speed.append(jspeed)
-                            out_src.append("jumper"); out_end.append(c_time)
-                last_segment_time = sample_time
-                last_segment = cur_nodes
-                out_trace.append(trace); out_seg.append(c_seg)
-                out_time.append(sample_time); out_speed.append(speed)
-                out_src.append("crossing"); out_end.append(c_time)
-            if len(out_trace) >= 65536:
-                yield pd.DataFrame(
-                    {"trace_id": out_trace, "segment_id": out_seg, "time": out_time,
-                     "speed": out_speed, "source": out_src, "end_time": out_end}
-                )
-                out_trace, out_seg, out_time, out_speed, out_src, out_end = [], [], [], [], [], []
-        if out_trace:
-            yield pd.DataFrame(
-                {"trace_id": out_trace, "segment_id": out_seg, "time": out_time,
-                 "speed": out_speed, "source": out_src, "end_time": out_end}
-            )
-
-    return arranged.mapInPandas(run, schema=SAMPLE_SCHEMA)
-
-
-def speed_samples_planet(
-    spark: SparkSession,
-    crossings: DataFrame,
-    segments: DataFrame,
-    jumpers_pd: pd.DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-):
-    """Planet-scale variant of the J3/J4 kernel: NO ``segments.collect()``.
-
-    The Arrow payload is FOUR columns (trace_id, time, packed, dist) — the
-    same three the dict path ships plus dist, which the dict path reads
-    from a driver-built O(network) broadcast.  The pending tie-break's
-    tripline_id is md5-derived from (segment_id, index) == ``packed``, so
-    the kernel recomputes it with a per-executor memo instead of shipping
-    it (distinct packed values per task are bounded by the segments the
-    task touches).
+    Partition-streaming kernel: repartition by trace_id +
+    sortWithinPartitions, then ONE mapInPandas pass that cuts each Arrow
+    batch into per-trace runs and hands each run to `pair_crossings`,
+    carrying the current trace's state across batch boundaries — batch
+    size does not affect results.  Semantically a per-trace applyInPandas,
+    without the per-group pandas-frame overhead (traces are small —
+    grouped-map was ~20× slower at 64k traces).  The Arrow payload is the
+    five columns the state machine reads; the tie-break's tripline id is
+    recomputed per worker (`_tripline_id`), not shipped.
 
     J4 (jumper gap-fill) leaves Python entirely: a jumper sample is a pure
     function of CONSECUTIVE emitted crossing samples of one trace, and the
     kernel already tracks the previous emission — it ships it as two extra
     columns (prev_seg, prev_time) on the ~|samples| output rows, and ONE
-    downstream pass (two segment-dim equi-joins + broadcast jumper left
-    join + a combined struct-array explode) births the crossing and jumper
-    rows together — no self-union, no window, the pipeline executes once.
-    The segment endpoint nodes therefore join onto the ~|samples| rows
-    instead of riding every crossing through the Arrow pipe (round-2 shape:
-    7 columns × |crossings| — measured ~17% slower per 2-core executor).
-
-    Output is bit-identical to ``speed_samples`` (test_infra planet-mode
-    parity test): same sort order, same state machine, same quirks."""
+    downstream pass (`_jumper_samples_declarative`: two segment-dim
+    equi-joins + broadcast jumper left join + a combined struct-array
+    explode) births the crossing and jumper rows together — no self-union,
+    no window, the pipeline executes once.  The segment endpoint nodes
+    therefore join onto the ~|samples| rows instead of riding every
+    crossing through the Arrow pipe (measured ~17% slower per 2-core
+    executor with 7 columns × |crossings|)."""
+    # explicit partition count: AQE would coalesce by byte size and starve
+    # the Python stage of parallelism
     n_part = spark.sparkContext.defaultParallelism * 4
-    packed = F.shiftleft(F.col("tripline_index").cast("long"), 60) + F.col("segment_id")
     arranged = (
         crossings.select(
-            "trace_id", "seq", "time", "tile_x", "tile_y",
-            "tripline_id", packed.alias("packed"), "dist",
+            "trace_id", "seq", "time", "tile_x", "tile_y", "tripline_id",
+            "segment_id", "tripline_index", "dist",
         )
         .repartition(n_part, "trace_id")
         .sortWithinPartitions("trace_id", "seq", "time", "tile_x", "tile_y", "tripline_id")
-        .select("trace_id", "time", "packed", "dist")
+        # ordering established — project the sort keys away so they never
+        # cross the Arrow boundary
+        .select("trace_id", "time", "segment_id", "tripline_index", "dist")
     )
+    names = [f.name for f in CROSS_SAMPLE_SCHEMA.fields]
 
     def run(batches):
-        seg_mask = (1 << 60) - 1
-        tlid_memo: dict = {}
-
-        def tlid(p):
-            v = tlid_memo.get(p)
-            if v is None:
-                v = tlid_memo[p] = tripline_id_py(p & seg_mask, p >> 60)
-            return v
-
-        state_trace = None
-        pending: list[tuple] = []
-        last_seg = -1
-        last_time = 0
+        trace, state = None, None
         out_trace: list[int] = []
-        out_seg: list[int] = []
-        out_time: list[int] = []
-        out_speed: list[float] = []
-        out_end: list[int] = []
-        out_pseg: list[int] = []
-        out_ptime: list[int] = []
-
-        def flush():
-            return pd.DataFrame(
-                {"trace_id": out_trace, "segment_id": out_seg, "time": out_time,
-                 "speed": out_speed, "end_time": out_end,
-                 "prev_seg": out_pseg, "prev_time": out_ptime}
-            )
-
+        out: tuple[list, ...] = ([], [], [], [], [], [])
+        out_seg = out[0]
         for pdf in batches:
-            tr = pdf["trace_id"].to_numpy().tolist()
-            tm = pdf["time"].to_numpy().tolist()
-            pk = pdf["packed"].to_numpy().tolist()
-            ds = pdf["dist"].to_numpy().tolist()
-            for i in range(len(tr)):
-                trace = tr[i]
-                if trace != state_trace:
-                    state_trace = trace
-                    pending = []
-                    last_seg = -1
-                    last_time = 0
-                c_time = tm[i]
-                p = pk[i]
-                c_seg = p & seg_mask
-                c_idx = p >> 60
-                c_dist = ds[i]
-                last_crossing = None
-                if pending:
-                    it = pending if len(pending) == 1 else sorted(pending)
-                    for pc in it:
-                        if pc[2] == c_seg and pc[3] <= c_idx and abs(pc[3] - c_idx) == 1:
-                            last_crossing = pc
-                            pending = []
-                            break
-                if c_idx == 1:
-                    pending.append((c_time, tlid(p), c_seg, c_idx, c_dist))
-                if last_crossing is None:
-                    continue
-                if c_idx < last_crossing[3]:
-                    continue
-                dt_s = (c_time - last_crossing[0]) // 1000
-                if dt_s == 0:
-                    continue
-                speed = abs(c_dist - last_crossing[4]) / dt_s
-                if speed > MAX_SPEED:
-                    continue
-                out_trace.append(trace); out_seg.append(c_seg)
-                out_time.append(last_crossing[0]); out_speed.append(speed)
-                out_end.append(c_time)
-                out_pseg.append(last_seg); out_ptime.append(last_time)
-                last_seg = c_seg
-                last_time = last_crossing[0]
+            tr = pdf["trace_id"].to_numpy()
+            if not len(tr):
+                continue
+            # tolist(): one C pass to native python scalars — per-element
+            # numpy→int conversion in the loop is ~3× slower
+            tm, sg, ix, ds = (pdf[c].to_numpy().tolist()
+                              for c in ("time", "segment_id", "tripline_index", "dist"))
+            starts = [0, *(np.flatnonzero(tr[1:] != tr[:-1]) + 1).tolist()]
+            for t, lo, hi in zip(tr[starts].tolist(), starts, [*starts[1:], len(tr)]):
+                if t != trace:
+                    trace, state = t, ([], -1, 0)
+                n = len(out_seg)
+                state = pair_crossings(tm[lo:hi], sg[lo:hi], ix[lo:hi], ds[lo:hi], state, out)
+                out_trace += [t] * (len(out_seg) - n)
             if len(out_trace) >= 65536:
-                yield flush()
-                out_trace, out_seg, out_time, out_speed, out_end = [], [], [], [], []
-                out_pseg, out_ptime = [], []
+                yield pd.DataFrame(dict(zip(names, (out_trace, *out))))
+                out_trace, out = [], ([], [], [], [], [], [])
+                out_seg = out[0]
         if out_trace:
-            yield flush()
+            yield pd.DataFrame(dict(zip(names, (out_trace, *out))))
 
-    cross_schema = (
-        "trace_id long, segment_id long, time long, speed double, "
-        "end_time long, prev_seg long, prev_time long"
-    )
-    cross_samples = arranged.mapInPandas(run, schema=cross_schema)
+    cross_samples = arranged.mapInPandas(run, schema=CROSS_SAMPLE_SCHEMA)
     return _jumper_samples_declarative(spark, cross_samples, segments, jumpers_pd, cfg)
 
 
@@ -651,8 +511,8 @@ def _jumper_samples_declarative(
         .join(seg_b, "segment_id", "inner")  # segment exists by construction
         .join(F.broadcast(jump_dim), ["a_end", "b_start"], "left")
     )
-    # FLOOR division (Python // semantics, matching the oracle/dict kernel
-    # exactly, negative gaps included); exact for |diff| < 2^53 ms
+    # FLOOR division (Python // semantics, matching the oracle exactly,
+    # negative gaps included); exact for |diff| < 2^53 ms
     dtj_s = F.floor((F.col("time") - F.col("prev_time")) / F.lit(1000.0)).cast("long")
     jspeed = F.when(dtj_s == 0, F.lit(float("inf"))).otherwise(
         (F.col("length_m") + F.lit(MIN_SEGMENT_LEN * 2)) / dtj_s
@@ -835,8 +695,8 @@ def run_pipeline(
     bcast = memo_rowcount(triplines) * 9 <= cfg.broadcast_dim_max_rows
     crossings = find_crossings(pairs, tl_index, broadcast_triplines=bcast, cfg=cfg)
     # NOTE: crossings already inherit the pairing window's hash(trace_id)
-    # partitioning through the narrow join chain, so repartition_input=False
-    # is semantically valid here — but measured SLOWER (93s vs 68s at 8
+    # partitioning through the narrow join chain, so speed_samples could
+    # skip its repartition — but that measured SLOWER (93s vs 68s at 8
     # cores / 53M rows): the explicit kernel exchange decouples the fat
     # explode+join stage from the Python stage and rebalances the per-trace
     # crossing skew across 4× finer tasks.  Keep the 3-exchange shape.

@@ -1,12 +1,12 @@
-"""Structured Streaming variant of the match pipeline (SURVEY §2.8) —
-PLANET MODE: no O(network) driver state anywhere.
+"""Structured Streaming variant of the match pipeline (SURVEY §2.8) — no
+O(network) driver state anywhere.
 
 The reference is a continuously-running stateful processor: per-vehicle
 queues, 5-minute vehicle TTL (VehicleStates.java:18,232-245), arrival-order
 pairing with no watermark — and it holds the WHOLE network in process
 memory (VehicleStates.java:174-246).  This recast does better: the network
 stays a distributed (static) relation, and the stream composes as the same
-medallion the batch planet path uses:
+medallion the batch path uses:
 
   query 1 (bronze→silver):  readStream fixes
       → `pair_fixes_stream`        stateful: state = lastPoint (+ a seq
@@ -23,10 +23,11 @@ medallion the batch planet path uses:
                                    last segment + last segment time — the
                                    REMAINING Vehicle fields (:34-39); the
                                    two queries' states together are
-                                   exactly the reference's, unchanged
+                                   exactly the reference's, unchanged;
+                                   the J3 loop is the batch kernel's
+                                   `pair_crossings`
       → `_jumper_samples_declarative`  STATELESS J4 over static dims —
-                                   shared verbatim with the batch planet
-                                   path
+                                   shared verbatim with the batch path
       → samples sink (store merge / memory / …)
 
 Two queries are REQUIRED, not a style choice: Spark rejects chained
@@ -57,26 +58,23 @@ from ..config import (
     DEFAULT_CONFIG,
     MAX_PAIR_DELTA_MS_FIXED,
     MAX_PAIR_DELTA_MS_QUIRK,
-    MAX_SPEED,
     VEHICLE_INVALIDATION_TIME_MS,
     EngineConfig,
+)
+from ..plans.match import (
+    CROSS_SAMPLE_SCHEMA,
+    SAMPLE_SCHEMA,
+    _jumper_samples_declarative,
+    find_crossings,
+    offmap_traces,
+    pair_crossings,
+    tripline_cell_index,
 )
 
 # the fix-source DDL every entry point reads with (decode_fixes' output
 # shape) — lives here, next to CROSSING_SCHEMA, so examples/tools/tests
 # cannot drift from the kernels
 FIX_SCHEMA = "image_id string, trace_id long, ts long, lat double, lon double"
-
-STREAM_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("trace_id", T.LongType(), False),
-        T.StructField("segment_id", T.LongType(), False),
-        T.StructField("time", T.LongType(), False),
-        T.StructField("speed", T.DoubleType(), False),
-        T.StructField("source", T.StringType(), False),
-        T.StructField("end_time", T.LongType(), False),
-    ]
-)
 
 # ---------------------------------------------------------------------------
 # query 1: stateful pairing (Vehicle.java:29-33) + declarative J1/J2
@@ -201,8 +199,6 @@ def stream_crossings(
     J2 refine — shared code, not a streaming re-implementation).  The
     result is the append-mode crossing log to persist as the silver table
     (CROSSING_SCHEMA = find_crossings' output shape)."""
-    from ..plans.match import find_crossings, tripline_cell_index
-
     pairs = pair_fixes_stream(fixes_stream, cfg)
     return find_crossings(pairs, tripline_cell_index(triplines), cfg=cfg)
 
@@ -217,21 +213,10 @@ CROSSING_SCHEMA = (
 # query 2: stateful crossing pairing (Vehicle.java:34-39) + declarative J4
 # ---------------------------------------------------------------------------
 
-CROSS_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("trace_id", T.LongType(), False),
-        T.StructField("segment_id", T.LongType(), False),
-        T.StructField("time", T.LongType(), False),
-        T.StructField("speed", T.DoubleType(), False),
-        T.StructField("end_time", T.LongType(), False),
-        T.StructField("prev_seg", T.LongType(), False),
-        T.StructField("prev_time", T.LongType(), False),
-    ]
-)
-
 # pending crossings + last segment + last segment time — the remaining
 # Vehicle fields (Vehicle.java:34-39); together with PAIR_STATE_SCHEMA the
-# reference's state is covered unchanged.
+# reference's state is covered unchanged.  This is `pair_crossings`' state
+# as columns.
 #
 # Pending crossings are (time, tripline_id, segment_id, index, dist)
 # tuples.  The ids are md5-derived 60-bit longs (> 2^53): they do NOT
@@ -254,17 +239,18 @@ CROSS_STATE_SCHEMA = T.StructType(
 
 def crossing_samples_stream(crossings_stream: DataFrame) -> DataFrame:
     """Per-trace J3 crossing pairing over the silver crossing log: the
-    batch planet kernel's state machine (plans/match.speed_samples_planet)
-    with the state held in GroupState instead of partition-stream locals.
-    Emits crossing samples carrying (prev_seg, prev_time) so J4 jumper
-    gap-fill stays a downstream DECLARATIVE join (`jumper_samples_stream`)
-    — no network dict anywhere."""
+    batch kernel's state machine (plans/match.pair_crossings, shared with
+    plans/match.speed_samples) with its state held in GroupState between
+    micro-batches.  Emits crossing samples carrying (prev_seg, prev_time)
+    so J4 jumper gap-fill stays a downstream DECLARATIVE join
+    (`jumper_samples_stream`) — no network dict anywhere."""
+    names = [f.name for f in CROSS_SAMPLE_SCHEMA.fields]
 
     def kernel(key, pdf_iter, state: GroupState):
         trace_id = key[0]
         if state.hasTimedOut:  # W4 vehicle eviction
             state.remove()
-            yield pd.DataFrame(columns=[f.name for f in CROSS_SAMPLE_SCHEMA.fields])
+            yield pd.DataFrame(columns=names)
             return
         if state.exists:
             p_time, p_tl, p_seg, p_idx, p_dist, last_seg, last_time = state.get
@@ -279,7 +265,7 @@ def crossing_samples_stream(crossings_stream: DataFrame) -> DataFrame:
         else:
             pending, last_seg, last_time = [], -1, 0
 
-        out = []
+        out: tuple[list, ...] = ([], [], [], [], [], [])
         # concatenate Arrow chunks first: the deterministic order below
         # must span the WHOLE delivered batch, not each chunk separately
         # (maxRecordsPerBatch can split one trace's rows across chunks)
@@ -291,58 +277,16 @@ def crossing_samples_stream(crossings_stream: DataFrame) -> DataFrame:
             pdf = pdf.sort_values(
                 ["seq", "time", "tile_x", "tile_y", "tripline_id"], kind="mergesort"
             )
-            # zip over native lists, not itertuples: tolist() yields Python
-            # ints/floats directly (~3× the row-loop throughput, no per-field
-            # casts) — the loop itself is a genuinely sequential state
-            # machine (pending set mutates per row), so this is the floor
-            # short of a cython kernel
-            for c_time, tl_id, c_seg, c_idx, c_dist in zip(
-                pdf["time"].tolist(),
-                pdf["tripline_id"].tolist(),
-                pdf["segment_id"].tolist(),
-                pdf["tripline_index"].tolist(),
-                pdf["dist"].tolist(),
-            ):
-                last_crossing = None
-                if pending:
-                    it = pending if len(pending) == 1 else sorted(pending)
-                    for pc in it:
-                        if pc[2] == c_seg and pc[3] <= c_idx and abs(pc[3] - c_idx) == 1:
-                            last_crossing = pc
-                            pending = []
-                            break
-                if c_idx == 1:
-                    pending.append((c_time, tl_id, c_seg, c_idx, c_dist))
-                if last_crossing is None:
-                    continue
-                if c_idx < last_crossing[3]:
-                    continue
-                dt_s = (c_time - last_crossing[0]) // 1000
-                if dt_s == 0:
-                    continue
-                speed = abs(c_dist - last_crossing[4]) / dt_s
-                if speed > MAX_SPEED:
-                    continue
-                out.append(
-                    (trace_id, c_seg, last_crossing[0], speed, c_time,
-                     last_seg, last_time)
-                )
-                last_seg = c_seg
-                last_time = last_crossing[0]
-
-        state.update(
-            (
-                [int(p[0]) for p in pending],
-                [int(p[1]) for p in pending],
-                [int(p[2]) for p in pending],
-                [int(p[3]) for p in pending],
-                [float(p[4]) for p in pending],
-                last_seg,
-                last_time,
+            pending, last_seg, last_time = pair_crossings(
+                pdf["time"].tolist(), pdf["segment_id"].tolist(),
+                pdf["tripline_index"].tolist(), pdf["dist"].tolist(),
+                (pending, last_seg, last_time), out,
             )
-        )
+
+        pend_cols = [list(c) for c in zip(*pending)] if pending else [[]] * 5
+        state.update((*pend_cols, last_seg, last_time))
         state.setTimeoutDuration(VEHICLE_INVALIDATION_TIME_MS)
-        yield pd.DataFrame(out, columns=[f.name for f in CROSS_SAMPLE_SCHEMA.fields])
+        yield pd.DataFrame(dict(zip(names, ([trace_id] * len(out[0]), *out))))
 
     return crossings_stream.groupBy("trace_id").applyInPandasWithState(
         kernel,
@@ -360,8 +304,6 @@ def jumper_samples_stream(
     `_jumper_samples_declarative` (J4 as stream-static joins + the
     combined struct-array explode — shared code).  Returns the final
     append-mode SAMPLE_SCHEMA stream."""
-    from ..plans.match import _jumper_samples_declarative
-
     return _jumper_samples_declarative(
         spark, crossing_samples_stream(crossings_stream), segments, jumpers
     )
@@ -463,9 +405,7 @@ def offmap_traces_from_stream(
     into a store and serves it by query (OSMDataStore.java:116,156-158),
     which is exactly this bronze→silver shape.  Batch==stream parity:
     tests/test_infra.py::test_streaming_offmap_matches_batch."""
-    from ..plans.match import offmap_traces
-
-    samples = spark.createDataFrame(streamed_samples_pd, schema=STREAM_SAMPLE_SCHEMA)
+    samples = spark.createDataFrame(streamed_samples_pd, schema=SAMPLE_SCHEMA)
     return offmap_traces(spark, samples, segments, jumpers_pd, fixes)
 
 
