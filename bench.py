@@ -233,8 +233,6 @@ def main():
     }
 
     # --- network build (small; timed) -------------------------------------
-    import pandas as _pd
-
     net: dict = {}
 
     def _network_build():
@@ -245,9 +243,7 @@ def main():
         # query consumes the stored tables; leaving these lazy made every
         # downstream entry silently re-execute the network lineage (~1 s
         # each at bench scale)
-        segs, tls = segs.localCheckpoint(), tls.localCheckpoint()
-        if not isinstance(jumpers, _pd.DataFrame):
-            jumpers = jumpers.localCheckpoint()
+        segs, tls, jumpers = segs.localCheckpoint(), tls.localCheckpoint(), jumpers.localCheckpoint()
         n = tls.count()
         net.update(segs=segs, tls=tls, jumpers=jumpers)
         return n
@@ -325,6 +321,7 @@ def main():
     # synthetic gaussian vectors (seed 0); counts are the raw band-join
     # output — the structural join size the rule bounds.
     import numpy as np
+    import pandas as _pd
 
     t0 = time.time()
     rng = np.random.RandomState(0)

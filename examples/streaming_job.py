@@ -107,11 +107,11 @@ def main():
         from traffic_engine_spark.sources.store import SnapshotStore
 
         segs = spark.read.parquet(f"{args.network}/segments")
-        # jumpers as a Spark relation (planet shape): rebuild the sharded
-        # fold from the stored segments — or read a persisted jumper table
-        from traffic_engine_spark.plans.network import build_jumpers_sharded
+        # rebuild the jumper fold from the stored segments — or read a
+        # persisted jumper table
+        from traffic_engine_spark.plans.network import build_jumpers
 
-        jumpers = build_jumpers_sharded(spark, segs)
+        jumpers = build_jumpers(segs)
         store = SnapshotStore(
             spark, args.store,
             key_cols=["segment_id", "week", "hour_of_week", "speed_bin"],

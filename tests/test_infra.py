@@ -89,11 +89,11 @@ def test_repartition_by_morton_orders_spatially(spark, images_pd):
 
 
 def _batch_samples(spark, spark_network, images_pd):
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     images = spark.createDataFrame(images_pd)
     return (
         M.speed_samples(spark, M.find_crossings(M.pair_fixes(M.decode_fixes(images)),
-                                                M.tripline_cell_index(tls)), segs, jumpers_pd)
+                                                M.tripline_cell_index(tls)), segs, jumpers)
         .toPandas()
     )
 
@@ -152,7 +152,7 @@ def _run_stream(spark, spark_network, images_pd, qname, n_slices=1, expected_row
         stream_crossings,
     )
 
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     fixes_pd = M.decode_fixes(spark.createDataFrame(images_pd)).toPandas()
 
     with tempfile.TemporaryDirectory(ignore_cleanup_errors=True) as d:
@@ -192,7 +192,7 @@ def _run_stream(spark, spark_network, images_pd, qname, n_slices=1, expected_row
         cr_reader = spark.readStream.schema(CROSSING_SCHEMA)
         if n_slices > 1:
             cr_reader = cr_reader.option("maxFilesPerTrigger", 1)
-        out = jumper_samples_stream(spark, cr_reader.parquet(silver), segs, jumpers_pd)
+        out = jumper_samples_stream(spark, cr_reader.parquet(silver), segs, jumpers)
         q2 = (
             out.writeStream.format("memory").queryName(qname)
             .outputMode("append").option("checkpointLocation", os.path.join(d, "ck2"))
@@ -255,7 +255,7 @@ def test_streaming_checkpoint_resume_no_duplicates(spark, spark_network, images_
     exactly-once via the checkpointed offset/commit log)."""
     from traffic_engine_spark.streaming.match_stream import FIX_SCHEMA, stream_crossings
 
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     fixes_pd = M.decode_fixes(spark.createDataFrame(images_pd)).toPandas()
     want = M.find_crossings(
         M.pair_fixes(M.decode_fixes(spark.createDataFrame(images_pd))),
@@ -312,16 +312,16 @@ def test_streaming_offmap_matches_batch(spark, spark_network, images_pd):
     exactly — ids, windows, and polyline coords."""
     from traffic_engine_spark.streaming.match_stream import offmap_traces_from_stream
 
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     fixes = M.decode_fixes(spark.createDataFrame(images_pd))
 
     batch_samples = _batch_samples(spark, spark_network, images_pd)
     streamed = _run_stream(spark, spark_network, images_pd, "stream_offmap_src",
                            n_slices=4, expected_rows=len(batch_samples))
     want = M.offmap_traces(
-        spark, spark.createDataFrame(batch_samples), segs, jumpers_pd, fixes
+        spark, spark.createDataFrame(batch_samples), segs, jumpers, fixes
     ).toPandas()
-    got = offmap_traces_from_stream(spark, streamed, segs, jumpers_pd, fixes).toPandas()
+    got = offmap_traces_from_stream(spark, streamed, segs, jumpers, fixes).toPandas()
     assert len(want) > 0
     for df in (want, got):
         df["lons"] = df["lons"].apply(tuple)
@@ -362,12 +362,12 @@ def test_streaming_gate_then_kernel_composition(spark, spark_network, images_pd,
         stream_crossings,
     )
 
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     images = spark.createDataFrame(images_pd)
     fixes_pd = M.decode_fixes(images).toPandas()
 
     gate_cfg = EngineConfig(apply_anonymity_gate=True)
-    _, batch_samples = M.run_pipeline(spark, images, tls, segs, jumpers_pd, gate_cfg)
+    _, batch_samples = M.run_pipeline(spark, images, tls, segs, jumpers, gate_cfg)
     want = batch_samples.toPandas()
     n_gated = M.anonymity_gate(M.decode_fixes(images)).count()
 
@@ -408,7 +408,7 @@ def test_streaming_gate_then_kernel_composition(spark, spark_network, images_pd,
     q3 = (
         jumper_samples_stream(
             spark, spark.readStream.schema(CROSSING_SCHEMA).parquet(silver2),
-            segs, jumpers_pd,
+            segs, jumpers,
         )
         .writeStream.format("memory").queryName("gate_kernel_samples")
         .option("checkpointLocation", str(tmp_path / "ck3"))
@@ -520,7 +520,7 @@ def test_streaming_histograms_merge_store(spark, spark_network, images_pd, tmp_p
         stream_crossings,
     )
 
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     fixes_pd = M.decode_fixes(spark.createDataFrame(images_pd)).toPandas()
     batch = _batch_samples(spark, spark_network, images_pd)
     want = S.histograms(spark.createDataFrame(batch)).toPandas()
@@ -557,7 +557,7 @@ def test_streaming_histograms_merge_store(spark, spark_network, images_pd, tmp_p
             .option("maxFilesPerTrigger", 1).parquet(silver)
         )
         q = (
-            jumper_samples_stream(spark, crossings_stream, segs, jumpers_pd)
+            jumper_samples_stream(spark, crossings_stream, segs, jumpers)
             .writeStream.foreachBatch(histograms_to_store_sink(store))
             .outputMode("append")
             .option("checkpointLocation", os.path.join(d, "ck"))
@@ -597,29 +597,32 @@ def test_streaming_histograms_merge_store(spark, spark_network, images_pd, tmp_p
     assert totals == sorted(totals) and totals[-1] == expected_total
 
 
-def test_planet_mode_pipeline_identical_no_collect(spark, spark_network, images_pd, monkeypatch):
-    """Building and running the pipeline must never .collect() O(network)
-    data to the driver — asserted by poisoning DataFrame.collect while the
-    plan is built and executed — and the kernel stays exactly one Python
+def test_planet_mode_pipeline_identical_no_collect(spark, city, images_pd, monkeypatch):
+    """Building the network and building and running the pipeline must
+    never collect O(network) data to the driver — asserted by poisoning
+    DataFrame.collect and DataFrame.toPandas while the network and the
+    plan are built and executed — and the kernel stays exactly one Python
     stage.  Sample values are pinned against the oracle by
     test_parity::test_samples_exact_including_float_speeds and
     test_crossing_state_machine_random_fuzz."""
-    from pyspark.sql import DataFrame as SparkDF
-
-    segs, tls, jumpers_pd = spark_network
+    nodes, ways, _ = city
+    ways_df, nodes_df = spark.createDataFrame(ways), spark.createDataFrame(nodes)
     images = spark.createDataFrame(images_pd)
-    orig_collect = SparkDF.collect
+    # the session's concrete class: it overrides collect and toPandas, so
+    # patching pyspark.sql.DataFrame would poison nothing
+    SparkDF = type(images)
 
     def poisoned(self, *args, **kwargs):
-        raise AssertionError("the pipeline must not collect() to the driver")
+        raise AssertionError("the network build and pipeline must not collect to the driver")
 
-    monkeypatch.setattr(SparkDF, "collect", poisoned)
-    try:
-        _, samples = M.run_pipeline(spark, images, tls, segs, jumpers_pd)
+    with monkeypatch.context() as mp:
+        mp.setattr(SparkDF, "collect", poisoned)
+        mp.setattr(SparkDF, "toPandas", poisoned)
+        segs, tls, jumpers = N.build_network_tables(spark, ways_df, nodes_df)
+        assert jumpers.count() > 0
+        _, samples = M.run_pipeline(spark, images, tls, segs, jumpers)
         plan = samples._jdf.queryExecution().executedPlan().toString()
         n = samples.count()
-    finally:
-        monkeypatch.setattr(SparkDF, "collect", orig_collect)
     assert n > 0
     # exactly one Python stage in the match pipeline (the network build's
     # own stages sit below it in the plan): the J3 kernel, whose output
@@ -634,7 +637,7 @@ def test_jumper_dim_broadcast_gate(spark, spark_network, images_pd):
     dim) with IDENTICAL output; at the default gate they broadcast."""
     from traffic_engine_spark.config import EngineConfig
 
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     images = spark.createDataFrame(images_pd)
 
     # kill the optimizer's own small-table broadcasting so the plans show
@@ -644,14 +647,14 @@ def test_jumper_dim_broadcast_gate(spark, spark_network, images_pd):
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        _, s_bc = M.run_pipeline(spark, images, tls, segs, jumpers_pd, EngineConfig())
+        _, s_bc = M.run_pipeline(spark, images, tls, segs, jumpers, EngineConfig())
         plan_bc = s_bc._jdf.queryExecution().executedPlan().toString()
         # the jumper dim is ALWAYS broadcast-hinted, so asserting a BHJ
         # exists would be vacuous — pin the gate by the absence of any SMJ
         assert "SortMergeJoin" not in plan_bc
 
         _, s_smj = M.run_pipeline(
-            spark, images, tls, segs, jumpers_pd, EngineConfig(broadcast_dim_max_rows=0)
+            spark, images, tls, segs, jumpers, EngineConfig(broadcast_dim_max_rows=0)
         )
         plan_smj = s_smj._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan_smj
@@ -767,9 +770,9 @@ def test_bucketed_join_is_exchange_free(spark, spark_network, images_pd, tmp_pat
     the plain-join results exactly."""
     from traffic_engine_spark.sources.bucketed import read_bucketed, write_bucketed
 
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     images = spark.createDataFrame(images_pd)
-    _, samples = M.run_pipeline(spark, images, tls, segs, jumpers_pd)
+    _, samples = M.run_pipeline(spark, images, tls, segs, jumpers)
     # explicit paths → external tables; the (static) warehouse dir is
     # never written to
     write_bucketed(samples, "b_samples", ["segment_id"], num_buckets=8,
@@ -1332,46 +1335,42 @@ def test_simhash_pairs_pigeonhole_complete(spark):
     assert {(int(r.doc_a), int(r.doc_b), int(r.hamming)) for r in got.itertuples()} == want
 
 
-def test_jumpers_sharded_matches_global(spark, spark_network):
-    """The component-sharded J5 fold (planet path, zero driver folds) must
-    reproduce the global deterministic fold exactly — merges only occur
-    within node-connected chains, so sharding by connected component
-    preserves reference semantics bit-for-bit."""
-    segs, _, jumpers_global = spark_network
-    sharded = N.build_jumpers_sharded(spark, segs).toPandas()
+def test_jumpers_sharded_matches_global(spark_network, oracle_net):
+    """build_network_tables' component-sharded J5 fold (zero driver folds)
+    must reproduce the reference's one global fold (pyoracle) exactly —
+    merges only occur within node-connected chains, so sharding by
+    connected component preserves reference semantics bit-for-bit."""
+    _, _, jumpers = spark_network
     key = ["start_node_id", "end_node_id"]
-    a = jumpers_global.copy()
-    b = sharded.copy()
-    for df in (a, b):
-        df["segment_ids"] = df["segment_ids"].apply(tuple)
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b[a.columns].sort_values(key).reset_index(drop=True)
-    assert len(a) > 5  # fixture exercises jumper chains incl. merges
-    pd.testing.assert_frame_equal(a, b.astype(a.dtypes.to_dict()), check_exact=True)
+    want = pd.DataFrame(
+        [(k[0], k[1], j.length, tuple(j.segments)) for k, j in oracle_net.jumpers.items()],
+        columns=[*key, "length_m", "segment_ids"],
+    ).sort_values(key).reset_index(drop=True)
+    got = jumpers.toPandas()
+    got["segment_ids"] = got["segment_ids"].apply(tuple)
+    got = got[want.columns].sort_values(key).reset_index(drop=True)
+    assert len(want) > 5
+    # the fixture exercises merges, not only one-segment jumpers
+    assert (want["segment_ids"].map(len) >= 2).any()
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
 
 
-def test_jumper_fold_autoshards_and_pipeline_identical(spark, city, images_pd):
-    """cfg.jumper_fold_max_rows routes build_network_tables to the sharded
-    Spark fold (no driver toPandas); the full pipeline must be output-
-    identical whether the jumper dim arrives as pandas or as the sharded
-    DataFrame."""
-    from traffic_engine_spark.config import EngineConfig
-    from traffic_engine_spark.plans import match as M
-
-    nodes, ways, _ = city
-    ways_df = spark.createDataFrame(ways)
-    nodes_df = spark.createDataFrame(nodes)
-    segs_a, tls_a, jm_a = N.build_network_tables(spark, ways_df, nodes_df)
-    assert isinstance(jm_a, pd.DataFrame)  # city scale: driver fold
-    cfg = EngineConfig(jumper_fold_max_rows=0)
-    segs_b, tls_b, jm_b = N.build_network_tables(spark, ways_df, nodes_df, cfg=cfg)
-    assert not isinstance(jm_b, pd.DataFrame)  # forced sharded Spark fold
-    images = spark.createDataFrame(images_pd)
-    _, samples_a = M.run_pipeline(spark, images, tls_a, segs_a, jm_a)
-    _, samples_b = M.run_pipeline(spark, images, tls_b, segs_b, jm_b)
-    a = samples_a.toPandas().sort_values(list(samples_a.columns)).reset_index(drop=True)
-    b = samples_b.toPandas().sort_values(list(samples_a.columns)).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b[a.columns], check_exact=True)
+def test_jumpers_independent_of_shuffle_partitions(spark, spark_network):
+    """The jumper table is the same whether the component shuffle runs in
+    one partition or eight."""
+    segs, _, _ = spark_network
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    got = []
+    try:
+        for n in (1, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            pdf = N.build_jumpers(segs).toPandas()
+            pdf["segment_ids"] = pdf["segment_ids"].apply(tuple)
+            got.append(pdf.sort_values(["start_node_id", "end_node_id"]).reset_index(drop=True))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert len(got[0]) > 5
+    pd.testing.assert_frame_equal(got[0], got[1], check_exact=True)
 
 
 def test_snapshot_store_merge_and_time_travel(spark, tmp_path, spark_network):
@@ -1458,10 +1457,10 @@ def test_empty_and_malformed_inputs(spark, spark_network, images_pd):
     through the whole pipeline as a schema-preserving no-op, and malformed
     captions (unparseable geotags) are dropped row-wise — never a crash
     (Spark 4 ANSI mode would throw on a plain cast)."""
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
 
     empty = spark.createDataFrame([], schema=spark.createDataFrame(images_pd).schema)
-    crossings, samples = M.run_pipeline(spark, empty, tls, segs, jumpers_pd)
+    crossings, samples = M.run_pipeline(spark, empty, tls, segs, jumpers)
     assert crossings.count() == 0 and samples.count() == 0
     assert [f.name for f in samples.schema.fields] == [
         "trace_id", "segment_id", "time", "speed", "source", "end_time"
@@ -1475,8 +1474,8 @@ def test_empty_and_malformed_inputs(spark, spark_network, images_pd):
     clean_rows = len(images_pd) - len(bad.loc[::2])
     assert fixes.count() == clean_rows
     om = M.offmap_traces(
-        spark, M.run_pipeline(spark, spark.createDataFrame(bad), tls, segs, jumpers_pd)[1],
-        segs, jumpers_pd, fixes,
+        spark, M.run_pipeline(spark, spark.createDataFrame(bad), tls, segs, jumpers)[1],
+        segs, jumpers, fixes,
     )
     om.count()  # plan executes end-to-end on the degraded input
 
@@ -1562,7 +1561,7 @@ def test_find_crossings_smj_plans_on_stream(spark, spark_network, images_pd, tmp
         pair_fixes_stream,
     )
 
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     fixes_pd = M.decode_fixes(spark.createDataFrame(images_pd)).toPandas()
     src = str(tmp_path / "smj_src"); os.makedirs(src)
     fixes_pd.to_parquet(os.path.join(src, "all.parquet"), index=False)

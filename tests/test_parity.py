@@ -21,9 +21,9 @@ def _assert_same(df_oracle: pd.DataFrame, df_engine: pd.DataFrame, key):
 
 @pytest.fixture(scope="module")
 def engine_outputs(spark, spark_network, images_pd):
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     images_sdf = spark.createDataFrame(images_pd)
-    crossings, samples = M.run_pipeline(spark, images_sdf, tls, segs, jumpers_pd)
+    crossings, samples = M.run_pipeline(spark, images_sdf, tls, segs, jumpers)
     return crossings.toPandas(), samples.toPandas(), images_sdf
 
 
@@ -33,7 +33,7 @@ def oracle_outputs(oracle_net, fixes):
 
 
 def test_network_parity(spark_network, oracle_net):
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     osegs = pd.DataFrame(
         [
             (s.segment_id, s.way_id, s.start_node, s.end_node, s.length_m, s.oneway, s.street_type)
@@ -56,7 +56,7 @@ def test_network_parity(spark_network, oracle_net):
         [(k[0], k[1], j.length, tuple(j.segments)) for k, j in oracle_net.jumpers.items()],
         columns=["start_node_id", "end_node_id", "length_m", "segment_ids"],
     )
-    ejm = jumpers_pd.copy()
+    ejm = jumpers.toPandas()
     ejm["segment_ids"] = ejm["segment_ids"].apply(tuple)
     _assert_same(ojm, ejm, ["start_node_id", "end_node_id"])
 
@@ -93,10 +93,10 @@ def test_tz_offset_localtime_parity(spark, spark_network, images_pd, oracle_net,
     """C13 end-to-end: per-z11-area zone offsets (Vehicle.java:96-102 +
     OSMDataStore.java:412) wired through the pipeline, engine == oracle
     exactly, and hour-of-week binning actually shifts."""
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     images_sdf = spark.createDataFrame(images_pd)
     _, samples = M.run_pipeline(
-        spark, images_sdf, tls, segs, jumpers_pd,
+        spark, images_sdf, tls, segs, jumpers,
         tz_polygons_pd=_TZ_POLYS, tz_offsets_ms=_TZ_OFFSETS,
     )
     esamp = samples.toPandas()
@@ -237,11 +237,11 @@ def test_uninhabited_tz_polygons_skipped(spark, images_pd):
 def test_offmap_traces_exact(spark, spark_network, images_pd, oracle_net, oracle_outputs, fixes):
     """OffMapTrace parity: the engine's declarative gap plan must emit
     exactly the oracle's off-map polylines (ids, windows, coords)."""
-    segs, tls, jumpers_pd = spark_network
+    segs, tls, jumpers = spark_network
     images_sdf = spark.createDataFrame(images_pd)
-    crossings, samples = M.run_pipeline(spark, images_sdf, tls, segs, jumpers_pd)
+    crossings, samples = M.run_pipeline(spark, images_sdf, tls, segs, jumpers)
     eng = M.offmap_traces(
-        spark, samples, segs, jumpers_pd, M.decode_fixes(images_sdf)
+        spark, samples, segs, jumpers, M.decode_fixes(images_sdf)
     ).toPandas()
     _, osamp = oracle_outputs
     ora = pd.DataFrame(O.offmap_traces(osamp, oracle_net, fixes))

@@ -85,13 +85,6 @@ class EngineConfig:
     # 53M-row scaling job.  ~4M rows of (id, node) longs = ~64 MB
     # broadcast — comfortable on real executors; above it, sort-merge.
     broadcast_dim_max_rows: int = 4_000_000
-    # Jumper fold routing (J5): at or below this many short segments the
-    # deterministic fold runs on the driver (build_jumpers, pandas); above
-    # it build_network_tables auto-selects the sharded connected-component
-    # fold (build_jumpers_sharded, output-identical by
-    # test_jumpers_sharded_matches_global) so nothing O(network) reaches
-    # the driver.
-    jumper_fold_max_rows: int = 200_000
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -5,17 +5,19 @@ only once transitively-connected docs share one canonical cluster id.
 Min-label propagation over the undirected edge set: every node repeatedly
 takes the min label among itself and its neighbours; at fixpoint the label
 is the component's minimum node id (deterministic, run-order independent).
-Each iteration is two bounded-key equi-joins + one partial-agg groupBy, and
-the iteration count is the component hop-diameter — small for dedup
-clusters (near-dup graphs are dense blobs, not paths).  For adversarial
+Each iteration is one bounded-key equi-join + one partial-agg groupBy that
+also carries each node's previous label, so the convergence test reads the
+checkpointed aggregate instead of joining it again; the iteration count is
+the component hop-diameter — small for dedup clusters (near-dup graphs are
+dense blobs, not paths) and for jumper chains (metres long).  For adversarial
 long-chain graphs `connected_components_star` implements star-contraction
 (Kiveris et al., "Connected Components in MapReduce", SoCC'14): rounds
 scale with log² of the diameter, and `dedup_resolution` falls back to it
 automatically when label propagation's budget is exceeded.
 
-Same convergence discipline as plans/network.build_jumpers_sharded: each
-algorithm loudly raises if its own budget is exceeded instead of silently
-splitting a component.
+plans/network.build_jumpers labels its short-segment components here too.
+Each algorithm loudly raises if its own budget is exceeded instead of
+silently splitting a component.
 """
 
 from __future__ import annotations
@@ -35,30 +37,30 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    labels = e.select(F.col("a").alias("node")).distinct().withColumn(
-        "label", F.col("node")
+    # seeded with the first propagation step, min over (self ∪ neighbours),
+    # so the loop runs one iteration fewer
+    labels = e.groupBy(F.col("a").alias("node")).agg(
+        F.least(F.min("b"), F.col("node")).alias("label")
     )
     for _ in range(max_iter):
         la = labels.select(F.col("node").alias("a"), F.col("label"))
+        # every node has exactly one row from ``labels``, so max(old) is its
+        # previous label (the neighbour rows carry a null ``old``)
         prop = (
             e.join(la, "a")
             .select(F.col("b").alias("node"), "label")
-            .unionByName(labels)
+            .unionByName(labels.withColumn("old", F.col("label")), allowMissingColumns=True)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label"), F.max("old").alias("old"))
             .localCheckpoint()  # cut lineage per iteration
         )
-        changed = (
-            prop.join(labels.withColumnRenamed("label", "old"), "node")
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        labels = prop
-        if changed == 0:
+        moving = prop.filter(F.col("label") != F.col("old"))
+        labels = prop.select("node", "label")
+        if moving.isEmpty():
             return labels.select("node", F.col("label").alias("component"))
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations "
-        f"({changed} labels still moving): component hop-diameter exceeds "
+        f"({moving.count()} labels still moving): component hop-diameter exceeds "
         "max_iter — raise it, or switch to star-contraction for chain graphs"
     )
 

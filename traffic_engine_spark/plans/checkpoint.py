@@ -120,7 +120,7 @@ class CheckpointedPipeline:
 
 
 def run_checkpointed_pipeline(spark, images: DataFrame, triplines, segments,
-                              jumpers_pd, root: str, fingerprint: str):
+                              jumpers: DataFrame, root: str, fingerprint: str):
     """The §3.1 pipeline cut at its process boundaries (SURVEY §3.1 notes):
     decode/pairs → crossings → samples → histograms, each stage resumable."""
     from . import match as M
@@ -139,7 +139,7 @@ def run_checkpointed_pipeline(spark, images: DataFrame, triplines, segments,
 
     samples, r2 = cp.run_stage(
         "samples", fingerprint,
-        lambda: M.speed_samples(spark, crossings, segments, jumpers_pd),
+        lambda: M.speed_samples(spark, crossings, segments, jumpers),
     )
     results.append(r2)
 

@@ -304,20 +304,6 @@ SAMPLE_SCHEMA = T.StructType(
 )
 
 
-def _jumpers_sdf(spark: SparkSession, jumpers) -> DataFrame:
-    """The jumper dim as a Spark DataFrame — `build_network_tables` hands
-    back pandas below `cfg.jumper_fold_max_rows` and the sharded Spark
-    fold's DataFrame above it; every declarative consumer goes through
-    here so both shapes work."""
-    if isinstance(jumpers, DataFrame):
-        return jumpers
-    return spark.createDataFrame(
-        jumpers[["start_node_id", "end_node_id", "length_m", "segment_ids"]],
-        schema="start_node_id long, end_node_id long, length_m double, "
-        "segment_ids array<long>",
-    )
-
-
 # the J3 kernel's output, batch and streaming alike: one row per emitted
 # crossing sample, carrying the previous emission (prev_seg, prev_time;
 # -1/0 before the trace's first) for the declarative J4 pass
@@ -374,8 +360,6 @@ def pair_crossings(times, segs, idxs, dists, state, out):
             pending.append((c_time, _tripline_id(c_seg, c_idx), c_seg, c_idx, c_dist))
         if last_crossing is None:
             continue
-        if c_idx < last_crossing[3]:
-            continue  # wrong direction (Vehicle.java:221-224)
         dt_s = (c_time - last_crossing[0]) // 1000
         if dt_s == 0:
             continue
@@ -393,7 +377,7 @@ def speed_samples(
     spark: SparkSession,
     crossings: DataFrame,
     segments: DataFrame,
-    jumpers_pd: pd.DataFrame,
+    jumpers: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """J3/J4: crossings → SAMPLE_SCHEMA speed samples, with NO
@@ -464,14 +448,13 @@ def speed_samples(
             yield pd.DataFrame(dict(zip(names, (out_trace, *out))))
 
     cross_samples = arranged.mapInPandas(run, schema=CROSS_SAMPLE_SCHEMA)
-    return _jumper_samples_declarative(spark, cross_samples, segments, jumpers_pd, cfg)
+    return _jumper_samples_declarative(cross_samples, segments, jumpers, cfg)
 
 
 def _jumper_samples_declarative(
-    spark: SparkSession,
     cross_samples: DataFrame,
     segments: DataFrame,
-    jumpers_pd: pd.DataFrame,
+    jumpers: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """J4 as DataFrame algebra (Jumper.getSpeedSamples, Jumper.java:46-57 +
@@ -488,7 +471,7 @@ def _jumper_samples_declarative(
         F.col("segment_id").alias("prev_seg"), F.col("end_node_id").alias("a_end")
     )
     seg_b = segments.select("segment_id", F.col("start_node_id").alias("b_start"))
-    jump_dim = _jumpers_sdf(spark, jumpers_pd).select(
+    jump_dim = jumpers.select(
         F.col("start_node_id").alias("a_end"), F.col("end_node_id").alias("b_start"),
         "length_m", "segment_ids",
     )
@@ -550,7 +533,7 @@ def offmap_traces(
     spark: SparkSession,
     samples: DataFrame,
     segments: DataFrame,
-    jumpers_pd: pd.DataFrame,
+    jumpers: DataFrame,
     fixes: DataFrame,
 ) -> DataFrame:
     """OffMapTrace (geom/OffMapTrace.java:6-21, store osm/OSMDataStore.java:
@@ -587,7 +570,7 @@ def offmap_traces(
         F.col("segment_id").alias("start_id"), F.col("end_node_id").alias("a_end")
     )
     seg_b = segments.select("segment_id", F.col("start_node_id").alias("b_start"))
-    jump_dim = _jumpers_sdf(spark, jumpers_pd).select(
+    jump_dim = jumpers.select(
         F.col("start_node_id").alias("a_end"), F.col("end_node_id").alias("b_start")
     )
     gaps = (
@@ -666,7 +649,7 @@ def run_pipeline(
     images: DataFrame,
     triplines: DataFrame,
     segments: DataFrame,
-    jumpers_pd: pd.DataFrame,
+    jumpers: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
     tz_polygons_pd: pd.DataFrame | None = None,
     tz_offsets_ms: dict[int, int] | None = None,
@@ -700,5 +683,5 @@ def run_pipeline(
     # cores / 53M rows): the explicit kernel exchange decouples the fat
     # explode+join stage from the Python stage and rebalances the per-trace
     # crossing skew across 4× finer tasks.  Keep the 3-exchange shape.
-    samples = speed_samples(spark, crossings, segments, jumpers_pd, cfg)
+    samples = speed_samples(spark, crossings, segments, jumpers, cfg)
     return crossings, samples

@@ -8,12 +8,13 @@ Shape of the job (scale notes inline):
   3. per-way segment split + tripline geodesy inside ``applyInPandas``
      (numpy kernels from functions/geodesy.py — identical code to the
      pytest oracle, so float parity is exact).
-  4. jumpers: short segments are a tiny, bounded subset (< MIN_SEGMENT_LEN);
-     their transitive merge (J5) is order-dependent by reference semantics
-     (JumperDataStore.java:59-111), so it folds driver-side over the
-     deterministic (way_id, seq_in_way, twin) order.  At planet scale this
-     fold shards by connected component (z11 area) — documented, not needed
-     at test scale.
+  4. jumpers: the transitive merge (J5) of short segments (<= MIN_SEGMENT_LEN)
+     is order-dependent by reference semantics (JumperDataStore.java:59-111),
+     so it folds in the deterministic (way_id, seq_in_way, twin) order —
+     once per connected component of the short-segment node graph, inside
+     applyInPandas.  Nothing is collected to the driver.
+
+All three tables come back as cached DataFrames.
 
 Deterministic ids throughout (functions/ids.py) — stable across runs and
 parallelism levels (SURVEY §7.4.4).
@@ -43,6 +44,7 @@ from ..functions.geodesy import (
     planar_lengths,
 )
 from ..functions.ids import segment_id_py, tripline_id_py
+from ..operators.graph import connected_components
 from ..oracle.pyoracle import Jumper, add_jumper, is_oneway, street_type_of
 
 SEGMENT_SCHEMA = T.StructType(
@@ -224,35 +226,6 @@ def build_triplines(segments: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> 
     )
 
 
-def build_jumpers(segments: DataFrame) -> pd.DataFrame:
-    """J5 transitive merge of short segments.  Order-dependent by reference
-    semantics ⇒ deterministic driver-side fold over (way_id, seq_in_way,
-    twin).  Short segments are a bounded sliver of the network; at planet
-    scale shard this fold by z11 area (chains never span areas)."""
-    short = (
-        segments.filter(F.col("length_m") <= MIN_SEGMENT_LEN)
-        .select("segment_id", "way_id", "start_node_id", "end_node_id", "length_m",
-                "seq_in_way", "twin")
-        .orderBy("way_id", "seq_in_way", "twin")
-        .toPandas()
-    )
-    jumpers: dict = {}
-    start_index: set = set()
-    end_index: set = set()
-    for s in short.itertuples():
-        add_jumper(
-            jumpers, start_index, end_index,
-            Jumper(int(s.start_node_id), int(s.end_node_id), float(s.length_m),
-                   [int(s.segment_id)]),
-        )
-    rows = [
-        (k[0], k[1], j.length, j.segments) for k, j in jumpers.items()
-    ]
-    return pd.DataFrame(
-        rows, columns=["start_node_id", "end_node_id", "length_m", "segment_ids"]
-    )
-
-
 JUMPER_SCHEMA = T.StructType(
     [
         T.StructField("start_node_id", T.LongType(), False),
@@ -263,30 +236,27 @@ JUMPER_SCHEMA = T.StructType(
 )
 
 
-def build_jumpers_sharded(spark: SparkSession, segments: DataFrame) -> DataFrame:
-    """Planet-scale J5: the jumper fold sharded by connected component.
+def build_jumpers(segments: DataFrame) -> DataFrame:
+    """J5: short segments → jumpers (JUMPER_SCHEMA), the fold sharded by
+    connected component.
 
     add_jumper merges only jumpers sharing an endpoint node
     (JumperDataStore.java:59-111), so the merge closure of any jumper is its
     connected component in the short-segment node graph — components never
-    interact, and folding each component separately in the same
-    deterministic (way_id, seq_in_way, twin) order yields EXACTLY the
-    global fold's output (test_jumpers_sharded_matches_global).
+    interact, and folding each component separately in the deterministic
+    (way_id, seq_in_way, twin) order yields exactly the reference's one
+    global fold (test_jumpers_sharded_matches_global checks it against
+    pyoracle's).  A fold's cost also stays bounded by its component's size:
+    add_jumper scans the whole start index on every call.
 
     Components are computed by min-label propagation (a few tiny
     equi-joins; chains are metres-scale so the diameter — and iteration
-    count — is small), then each component folds inside applyInPandas.
-    Nothing O(network) ever reaches the driver."""
+    count — is small), then each component folds inside applyInPandas."""
     short = segments.filter(F.col("length_m") <= MIN_SEGMENT_LEN).select(
         "segment_id", "way_id", "start_node_id", "end_node_id", "length_m",
         "seq_in_way", "twin",
     )
-    # ONE fixpoint implementation in the repo: operators/graph owns the
-    # min-label propagation (same semantics this function used to inline —
-    # min node id per component, loud raise on non-convergence past the
-    # diameter bound)
-    from ..operators.graph import connected_components
-
+    # min node id per component; raises rather than split a component
     labels = connected_components(
         short.select(
             F.col("start_node_id").alias("a"), F.col("end_node_id").alias("b")
@@ -317,27 +287,15 @@ def build_jumpers_sharded(spark: SparkSession, segments: DataFrame) -> DataFrame
             columns=["start_node_id", "end_node_id", "length_m", "segment_ids"],
         )
 
-    return comp.groupBy("component").applyInPandas(
-        lambda key, pdf: fold(pdf), schema=JUMPER_SCHEMA
-    )
+    return comp.groupBy("component").applyInPandas(fold, schema=JUMPER_SCHEMA)
 
 
 def build_network_tables(
     spark: SparkSession, ways: DataFrame, nodes: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-):
-    """Full network build → (segments_df, triplines_df, jumpers).
-
-    ``jumpers`` is a pandas DataFrame from the driver fold while the
-    short-segment count is at most ``cfg.jumper_fold_max_rows``, and the
-    output-identical sharded Spark fold (``build_jumpers_sharded``) above
-    it — the pipeline accepts either (plans/match._jumpers_sdf), so at
-    planet scale nothing O(network) ever reaches the driver."""
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Full network build → (segments, triplines, jumpers), each cached."""
     segments = build_segments(spark, ways, nodes, cfg=cfg).cache()
     triplines = build_triplines(segments, cfg=cfg).cache()
-    n_short = segments.filter(F.col("length_m") <= MIN_SEGMENT_LEN).count()
-    if n_short > cfg.jumper_fold_max_rows:
-        jumpers = build_jumpers_sharded(spark, segments)
-    else:
-        jumpers = build_jumpers(segments)
+    jumpers = build_jumpers(segments).cache()
     return segments, triplines, jumpers

@@ -298,14 +298,14 @@ def crossing_samples_stream(crossings_stream: DataFrame) -> DataFrame:
 
 
 def jumper_samples_stream(
-    spark, crossings_stream: DataFrame, segments: DataFrame, jumpers
+    spark, crossings_stream: DataFrame, segments: DataFrame, jumpers: DataFrame
 ) -> DataFrame:
     """Query-2 composition: crossing kernel → the BATCH
     `_jumper_samples_declarative` (J4 as stream-static joins + the
     combined struct-array explode — shared code).  Returns the final
     append-mode SAMPLE_SCHEMA stream."""
     return _jumper_samples_declarative(
-        spark, crossing_samples_stream(crossings_stream), segments, jumpers
+        crossing_samples_stream(crossings_stream), segments, jumpers
     )
 
 
@@ -393,7 +393,7 @@ def sessionize_stream(
 
 
 def offmap_traces_from_stream(
-    spark, streamed_samples_pd: pd.DataFrame, segments, jumpers_pd, fixes
+    spark, streamed_samples_pd: pd.DataFrame, segments, jumpers: DataFrame, fixes
 ):
     """S9 on the streaming flow — the medallion wiring: the kernel streams
     append-mode samples into a silver table; off-map traces are the
@@ -406,7 +406,7 @@ def offmap_traces_from_stream(
     which is exactly this bronze→silver shape.  Batch==stream parity:
     tests/test_infra.py::test_streaming_offmap_matches_batch."""
     samples = spark.createDataFrame(streamed_samples_pd, schema=SAMPLE_SCHEMA)
-    return offmap_traces(spark, samples, segments, jumpers_pd, fixes)
+    return offmap_traces(spark, samples, segments, jumpers, fixes)
 
 
 # ---------------------------------------------------------------------------
