@@ -61,7 +61,7 @@ def main():
     ways = spark.read.parquet(args.ways)
     nodes = spark.read.parquet(args.nodes)
 
-    segs, tls, jumpers = N.build_network_tables(spark, ways, nodes, cfg=cfg)
+    segs, tls, jumpers = N.build_network_tables(spark, ways, nodes)
     segs.write.mode("overwrite").parquet(f"{args.out}/segments")
     tls.write.mode("overwrite").parquet(f"{args.out}/triplines")
 
@@ -69,7 +69,7 @@ def main():
         from traffic_engine_spark.plans.checkpoint import run_checkpointed_pipeline
 
         hist, results = run_checkpointed_pipeline(
-            spark, images, tls, segs, jumpers, args.checkpoint, args.fingerprint
+            spark, images, tls, segs, jumpers, args.checkpoint, args.fingerprint, cfg
         )
         for r in results:
             print(f"stage {r.name}: rows={r.rows} partitions={r.partitions} "
@@ -87,7 +87,7 @@ def main():
     TI.assign_tiles(images).write.mode("overwrite").parquet(f"{args.out}/tiles")
 
     if args.offmap:
-        M.offmap_traces(spark, samples, segs, jumpers, M.decode_fixes(images, cfg)) \
+        M.offmap_traces(samples, segs, jumpers, M.decode_fixes(images, cfg)) \
             .write.mode("overwrite").parquet(f"{args.out}/offmap_traces")
 
     spark.stop()

@@ -53,6 +53,35 @@ def test_checkpoint_resume_identical(tmp_path, spark, pipeline_inputs):
     assert len(manifest) == 9  # 3 stages × 3 runs
 
 
+def test_checkpointed_pipeline_honours_cfg(tmp_path, spark, pipeline_inputs, images_pd):
+    """The checkpointed stages are run_pipeline's composition: with the
+    anonymity gate on, the checkpointed histograms equal the gated
+    pipeline's, and differ from the ungated ones (the fixture really
+    exercises the gate)."""
+    from traffic_engine_spark.config import EngineConfig
+
+    _, segs, tls, jumpers = pipeline_inputs
+    # the first 13 traces: one of the city's two z11 tiles is seen by 9 of
+    # them (gated out), the other by 10 (released)
+    trace = images_pd["caption"].str.extract(r"trace=(\d+);")[0].astype(int)
+    images = spark.createDataFrame(images_pd[trace < 13])
+    gated = EngineConfig(apply_anonymity_gate=True)
+    key = ["segment_id", "week", "hour_of_week", "speed_bin"]
+
+    def table(hist):
+        return hist.select(*key, "n").toPandas().sort_values(key).reset_index(drop=True)
+
+    hist, _ = CP.run_checkpointed_pipeline(
+        spark, images, tls, segs, jumpers, str(tmp_path / "cp"), "v1", gated
+    )
+    got = table(hist)
+    want = table(S.histograms(M.run_pipeline(spark, images, tls, segs, jumpers, gated)[1]))
+    ungated = table(S.histograms(M.run_pipeline(spark, images, tls, segs, jumpers)[1]))
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()), check_exact=True)
+    assert not want.equals(ungated)
+
+
 def test_salted_join_matches_plain_join(spark, images_pd):
     images = spark.createDataFrame(images_pd)
     fixes = M.decode_fixes(images)
@@ -92,8 +121,8 @@ def _batch_samples(spark, spark_network, images_pd):
     segs, tls, jumpers = spark_network
     images = spark.createDataFrame(images_pd)
     return (
-        M.speed_samples(spark, M.find_crossings(M.pair_fixes(M.decode_fixes(images)),
-                                                M.tripline_cell_index(tls)), segs, jumpers)
+        M.speed_samples(spark, M.find_crossings(M.pair_fixes(M.decode_fixes(images)), tls),
+                        segs, jumpers)
         .toPandas()
     )
 
@@ -258,8 +287,7 @@ def test_streaming_checkpoint_resume_no_duplicates(spark, spark_network, images_
     segs, tls, jumpers = spark_network
     fixes_pd = M.decode_fixes(spark.createDataFrame(images_pd)).toPandas()
     want = M.find_crossings(
-        M.pair_fixes(M.decode_fixes(spark.createDataFrame(images_pd))),
-        M.tripline_cell_index(tls),
+        M.pair_fixes(M.decode_fixes(spark.createDataFrame(images_pd))), tls
     ).toPandas()
 
     src = str(tmp_path / "src"); os.makedirs(src)
@@ -319,7 +347,7 @@ def test_streaming_offmap_matches_batch(spark, spark_network, images_pd):
     streamed = _run_stream(spark, spark_network, images_pd, "stream_offmap_src",
                            n_slices=4, expected_rows=len(batch_samples))
     want = M.offmap_traces(
-        spark, spark.createDataFrame(batch_samples), segs, jumpers, fixes
+        spark.createDataFrame(batch_samples), segs, jumpers, fixes
     ).toPandas()
     got = offmap_traces_from_stream(spark, streamed, segs, jumpers, fixes).toPandas()
     assert len(want) > 0
@@ -1474,7 +1502,7 @@ def test_empty_and_malformed_inputs(spark, spark_network, images_pd):
     clean_rows = len(images_pd) - len(bad.loc[::2])
     assert fixes.count() == clean_rows
     om = M.offmap_traces(
-        spark, M.run_pipeline(spark, spark.createDataFrame(bad), tls, segs, jumpers)[1],
+        M.run_pipeline(spark, spark.createDataFrame(bad), tls, segs, jumpers)[1],
         segs, jumpers, fixes,
     )
     om.count()  # plan executes end-to-end on the degraded input
@@ -1551,11 +1579,12 @@ def test_store_op_id_seen_across_instances(spark, tmp_path):
 
 
 def test_find_crossings_smj_plans_on_stream(spark, spark_network, images_pd, tmp_path):
-    """ADVICE r4: the SMJ branch (broadcast_triplines=False) used to call
-    salted_join's plan-time hot-cell sampling, which throws
-    AnalysisException on a streaming DataFrame.  It must now fall through
-    to the plain join for streams — planning (and running one microbatch)
+    """The shuffle branch of the J1 join (tripline index over the broadcast
+    cap) salts hot cells with a plan-time sampling job, which throws
+    AnalysisException on a streaming DataFrame.  A streaming probe must
+    take the plain join instead — planning (and running one microbatch)
     succeeds and matches the batch crossings."""
+    from traffic_engine_spark.config import EngineConfig
     from traffic_engine_spark.streaming.match_stream import (
         FIX_SCHEMA,
         pair_fixes_stream,
@@ -1569,10 +1598,8 @@ def test_find_crossings_smj_plans_on_stream(spark, spark_network, images_pd, tmp
     pairs = pair_fixes_stream(
         spark.readStream.schema(FIX_SCHEMA).parquet(src)
     )
-    # plan-time: this line raised AnalysisException before the guard
-    cr = M.find_crossings(
-        pairs, M.tripline_cell_index(tls), broadcast_triplines=False
-    )
+    # plan-time: this line raises AnalysisException if a stream is salted
+    cr = M.find_crossings(pairs, tls, EngineConfig(broadcast_dim_max_rows=0))
     out = str(tmp_path / "smj_silver")
     q = (
         cr.writeStream.format("parquet").option("path", out)
@@ -1582,8 +1609,7 @@ def test_find_crossings_smj_plans_on_stream(spark, spark_network, images_pd, tmp
     _poll_stream(spark, q)
     got = spark.read.parquet(out).toPandas()
     want = M.find_crossings(
-        M.pair_fixes(M.decode_fixes(spark.createDataFrame(images_pd))),
-        M.tripline_cell_index(tls),
+        M.pair_fixes(M.decode_fixes(spark.createDataFrame(images_pd))), tls
     ).toPandas()
     assert len(got) == len(want)
 

@@ -240,9 +240,7 @@ def test_offmap_traces_exact(spark, spark_network, images_pd, oracle_net, oracle
     segs, tls, jumpers = spark_network
     images_sdf = spark.createDataFrame(images_pd)
     crossings, samples = M.run_pipeline(spark, images_sdf, tls, segs, jumpers)
-    eng = M.offmap_traces(
-        spark, samples, segs, jumpers, M.decode_fixes(images_sdf)
-    ).toPandas()
+    eng = M.offmap_traces(samples, segs, jumpers, M.decode_fixes(images_sdf)).toPandas()
     _, osamp = oracle_outputs
     ora = pd.DataFrame(O.offmap_traces(osamp, oracle_net, fixes))
     assert len(ora) > 0  # fixture exercises off-map gaps

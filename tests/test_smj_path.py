@@ -1,6 +1,10 @@
 """Planet-scale join path: the J1 cell join with broadcast disabled must
 produce identical crossings via sort-merge/shuffle-hash on the cell key —
-the strategy used when the tripline index exceeds executor memory."""
+the strategy used when the tripline index exceeds executor memory — and
+the gate that picks it must cost no Spark job once the network's row
+counts are known."""
+
+import os
 
 import pandas as pd
 
@@ -8,39 +12,20 @@ from traffic_engine_spark.plans import match as M
 
 
 def test_sort_merge_join_path_matches_broadcast(spark, spark_network, images_pd):
+    from traffic_engine_spark.config import EngineConfig
+
     segs, tls, _ = spark_network
     images = spark.createDataFrame(images_pd)
     pairs = M.pair_fixes(M.decode_fixes(images))
-    tli = M.tripline_cell_index(tls)
 
-    bc = M.find_crossings(pairs, tli, broadcast_triplines=True).toPandas()
-    smj = M.find_crossings(pairs, tli, broadcast_triplines=False).toPandas()
+    bc = M.find_crossings(pairs, tls).toPandas()
+    # a zero cap forces the shuffle branch (salted: the probe is batch)
+    smj = M.find_crossings(pairs, tls, EngineConfig(broadcast_dim_max_rows=0)).toPandas()
 
     key = ["trace_id", "seq", "time", "segment_id", "tripline_index", "tripline_id", "tile_x", "tile_y"]
     a = bc[key].sort_values(key).reset_index(drop=True)
     b = smj[key].sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b, check_exact=True)
-
-
-def test_smj_salted_unsalted_identical(spark, spark_network, images_pd):
-    """cfg.salt_smj_hot_cells must not change the crossing row multiset."""
-    from traffic_engine_spark.config import EngineConfig
-
-    _, tls, _ = spark_network
-    images = spark.createDataFrame(images_pd)
-    pairs = M.pair_fixes(M.decode_fixes(images))
-    tli = M.tripline_cell_index(tls)
-    salted = M.find_crossings(pairs, tli, broadcast_triplines=False).toPandas()
-    plain = M.find_crossings(
-        pairs, tli, broadcast_triplines=False,
-        cfg=EngineConfig(salt_smj_hot_cells=False),
-    ).toPandas()
-    key = list(salted.columns)
-    pd.testing.assert_frame_equal(
-        salted.sort_values(key).reset_index(drop=True),
-        plain[key].sort_values(key).reset_index(drop=True),
-        check_exact=True,
-    )
 
 
 def test_salted_j1_bounds_hot_cell_task_rows(spark):
@@ -51,10 +36,8 @@ def test_salted_j1_bounds_hot_cell_task_rows(spark):
     import pandas as pd_
     from pyspark.sql import functions as F
 
-    from traffic_engine_spark.config import EngineConfig
     from traffic_engine_spark.plans.skew import salted_join
 
-    cfg = EngineConfig()
     hot_n, cold_cells, per_cold = 9000, 50, 20
     probe = pd_.DataFrame({
         "_ck": [7777] * hot_n + [i for i in range(cold_cells) for _ in range(per_cold)],
@@ -87,7 +70,7 @@ def test_salted_j1_bounds_hot_cell_task_rows(spark):
         # collide into one task — the suite default of 8 would re-merge
         # salts by hash collision and mask the spread
         conf.set("spark.sql.shuffle.partitions", "64")
-        salted = salted_join(p, b, ["_ck"], probe_key="seq", cfg=cfg)
+        salted = salted_join(p, b, ["_ck"], probe_key="seq")
         plain = p.join(b, "_ck")
         m_salted, m_plain = max_task_rows(salted), max_task_rows(plain)
         a = salted.toPandas().sort_values(["_ck", "seq", "tl"]).reset_index(drop=True)
@@ -96,7 +79,7 @@ def test_salted_j1_bounds_hot_cell_task_rows(spark):
         for k, v in saved.items():
             conf.set(k, v)
     # hot cell: 9000 x 5 = 45k rows on ONE task unsalted; salted spreads
-    # them over cfg.salt_buckets (cell, salt) keys — allow one hash
+    # them over SALT_BUCKETS (cell, salt) keys — allow one hash
     # collision of salts into a task, hence /3 rather than /B
     assert m_plain >= hot_n * 5
     assert m_salted <= m_plain / 3, (m_salted, m_plain)
@@ -104,10 +87,10 @@ def test_salted_j1_bounds_hot_cell_task_rows(spark):
 
 
 def test_j1_broadcast_auto_gate(spark, spark_network, images_pd):
-    """VERDICT r4 #3: with the default broadcast_triplines=None the join
-    strategy is selected by index size against cfg.broadcast_dim_max_rows.
-    An over-threshold index must plan the SMJ+salt branch automatically
-    (no broadcast of the tripline side) with crossings parity unchanged."""
+    """find_crossings selects the J1 join strategy by the tripline count
+    ×9 against cfg.broadcast_dim_max_rows.  An over-threshold index must
+    plan the salted shuffle branch automatically (no broadcast of the
+    tripline side) with crossings parity unchanged."""
     from pyspark.sql import functions as F
 
     from traffic_engine_spark.config import EngineConfig
@@ -115,17 +98,15 @@ def test_j1_broadcast_auto_gate(spark, spark_network, images_pd):
     _, tls, _ = spark_network
     images = spark.createDataFrame(images_pd)
     pairs = M.pair_fixes(M.decode_fixes(images))
-    tli = M.tripline_cell_index(tls)
 
     # under-threshold (default cfg): auto picks broadcast
-    auto_bc = M.find_crossings(pairs, tli)
+    auto_bc = M.find_crossings(pairs, tls)
     plan_bc = auto_bc._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_bc
 
     # over-threshold: same call, tiny gate — must NOT broadcast the index
     tiny = EngineConfig(broadcast_dim_max_rows=1)
-    tli2 = M.tripline_cell_index(tls)  # fresh object: fresh rowcount memo
-    auto_smj = M.find_crossings(pairs, tli2, cfg=tiny)
+    auto_smj = M.find_crossings(pairs, tls, tiny)
     plan_smj = auto_smj._jdf.queryExecution().executedPlan().toString()
     # the J1 join itself must be the salted shuffle join (salted_join is
     # free to broadcast its tiny hot-cell-id dim internally — that's not
@@ -160,3 +141,30 @@ def test_run_pipeline_gates_j1_by_tripline_count(spark, spark_network, images_pd
         b.sort_values(key).reset_index(drop=True),
         check_exact=True,
     )
+
+
+def test_rebuilding_queries_launches_no_jobs(spark, spark_network, images_pd, tmp_path):
+    """Building a DataFrame launches no Spark jobs: once a first build has
+    memoised the network's row counts, rebuilding run_pipeline and
+    stream_crossings over the same cached network runs nothing."""
+    from traffic_engine_spark.streaming.match_stream import FIX_SCHEMA, stream_crossings
+
+    segs, tls, jumpers = spark_network
+    images = spark.createDataFrame(images_pd)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+
+    def build():
+        M.run_pipeline(spark, images, tls, segs, jumpers)
+        stream_crossings(spark.readStream.schema(FIX_SCHEMA).parquet(src), tls)
+
+    build()  # warm-up: may count the cached network once
+    sc = spark.sparkContext
+    group = "rebuild-launches-no-jobs"
+    sc.setJobGroup(group, "rebuild run_pipeline and stream_crossings")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -4,9 +4,12 @@ Single source of truth for the reference constants catalogued in
 SURVEY.md Appendix B.  Every value cites the file:line in
 /root/reference it mirrors, so the judge can check parity.
 
-``strict_parity`` gates the reference's *quirks* (latent unit bugs we
-reproduce bit-for-bit by default) versus the "fixed" variants — see
-SURVEY.md §7.4.
+``EngineConfig`` holds what a run may choose: ``strict_parity`` gates the
+reference's *quirks* (latent unit bugs we reproduce bit-for-bit by
+default) versus the "fixed" variants — see SURVEY.md §7.4;
+``convert_to_localtime`` and ``apply_anonymity_gate`` are the reference's
+own switches; ``broadcast_dim_max_rows`` sizes broadcasts to executor
+memory.  Join strategies are the engine's choice, not the caller's.
 """
 
 from __future__ import annotations
@@ -53,37 +56,30 @@ ID_COUNTER_START = 1_000_000_000
 
 # --- geodesy ---------------------------------------------------------------
 # The reference uses geotools GeodeticCalculator (WGS84 ellipsoid, Vincenty,
-# osm/OSMDataStore.java:622-628).  EngineConfig.geodesy selects the mode:
-# "wgs84" (default — vectorised Vincenty, geotools parity) or "sphere"
-# (haversine on the WGS84 mean radius, the round-1 behaviour).  The pytest
-# oracle uses the *identical* numpy code (functions/geodesy.py), so
-# engine↔oracle parity is exact by construction in either mode.
+# osm/OSMDataStore.java:622-628); functions/geodesy.py implements the same
+# Vincenty formulas, and the pytest oracle calls that identical numpy code,
+# so engine↔oracle parity is exact by construction.  The mean radius is
+# haversine's, for the datagen and trajectory helpers that use it.
 EARTH_RADIUS_M = 6_371_008.8
 BEARING_EPSILON_DEG = 0.000009      # two-point probe   (osm/OSMDataStore.java:641)
 
 
 @dataclass(frozen=True)
 class EngineConfig:
-    """Runtime knobs for the Spark engine."""
+    """Runtime knobs for the Spark engine: three switches from the
+    reference and one executor-memory sizing limit."""
 
     strict_parity: bool = True       # reproduce reference quirks (SURVEY §7.4)
-    geodesy: str = "wgs84"           # "wgs84" (geotools/Vincenty parity) | "sphere"
     convert_to_localtime: bool = True  # GPSPoint.convertToLocaltime (GPSPoint.java:22)
     apply_anonymity_gate: bool = False  # MINIMUM_VEHICLE_COUNT cell gating (W3)
-    # Skew handling: cells holding more than this fraction of candidate rows
-    # get salted into `salt_buckets` sub-keys before the J1 join.
-    skew_cell_fraction: float = 0.05
-    salt_buckets: int = 8
-    # J1 SMJ branch only (tripline index above broadcast size): salt hot
-    # cells explicitly via plans/skew.salted_join before the candidate
-    # join.  AQE skew-split remains the runtime backstop either way.
-    salt_smj_hot_cells: bool = True
     # Dimension tables at or below this row count get an explicit
     # broadcast hint where the fact side has no plan-time statistics
     # (e.g. kernel mapInPandas output): AQE's runtime SMJ->BHJ conversion
     # still pays the fact side's shuffle write, measured +28% on the
     # 53M-row scaling job.  ~4M rows of (id, node) longs = ~64 MB
     # broadcast — comfortable on real executors; above it, sort-merge.
+    # The J1 tripline cell index (plans/match.find_crossings) is gated
+    # against the same limit.
     broadcast_dim_max_rows: int = 4_000_000
 
 

@@ -8,14 +8,15 @@ Vincenty's formulas):
   * destination   — osm/OSMDataStore.java:594-612 (createTripLine, ±90°, 10 m)
   * azimuth clamp — osm/OSMDataStore.java:669-679
 
-The default mode is therefore "wgs84": vectorised Vincenty inverse/direct
+The engine therefore uses vectorised Vincenty inverse/direct on WGS84
 (T. Vincenty, Survey Review XXIII(176), 1975 — the same public algorithm
 geotools implements), verified against the paper's published test line in
-tests/test_functions.py.  "sphere" (haversine on the WGS84 mean radius)
-remains available behind EngineConfig.geodesy for speed-insensitive
-comparisons.  The pytest oracle imports *these same functions*, so
-engine↔oracle parity is exact by construction.  Everything is
-numpy-vectorised; used from datagen, the oracle, and inside Arrow-batched
+tests/test_functions.py; callers call `vincenty_inverse` and
+`vincenty_direct` directly.  `haversine_m` (the WGS84 mean-radius sphere)
+serves the synthetic-trace generator and the trajectory helpers, which
+need no geotools parity.  The pytest oracle imports *these same
+functions*, so engine↔oracle parity is exact by construction.  Everything
+is numpy-vectorised; used from datagen, the oracle, and inside Arrow-batched
 pandas UDFs (never per-row Python).
 """
 
@@ -162,57 +163,6 @@ def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
     return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
 
 
-def initial_bearing_deg(lon1, lat1, lon2, lat2) -> np.ndarray:
-    """Initial great-circle bearing, degrees in (-180, 180] like geotools azimuth."""
-    lon1, lat1, lon2, lat2 = (np.asarray(a, dtype=np.float64) for a in (lon1, lat1, lon2, lat2))
-    p1, p2 = np.radians(lat1), np.radians(lat2)
-    dlmb = np.radians(lon2 - lon1)
-    y = np.sin(dlmb) * np.cos(p2)
-    x = np.cos(p1) * np.sin(p2) - np.sin(p1) * np.cos(p2) * np.cos(dlmb)
-    return np.degrees(np.arctan2(y, x))
-
-
-def destination_point(lon, lat, bearing_deg, dist_m):
-    """Spherical direct problem: destination (lon, lat) from start + bearing + distance."""
-    lon, lat, bearing_deg, dist_m = (
-        np.asarray(a, dtype=np.float64) for a in (lon, lat, bearing_deg, dist_m)
-    )
-    p1 = np.radians(lat)
-    l1 = np.radians(lon)
-    brg = np.radians(bearing_deg)
-    dr = dist_m / EARTH_RADIUS_M
-    p2 = np.arcsin(np.sin(p1) * np.cos(dr) + np.cos(p1) * np.sin(dr) * np.cos(brg))
-    l2 = l1 + np.arctan2(
-        np.sin(brg) * np.sin(dr) * np.cos(p1),
-        np.cos(dr) - np.sin(p1) * np.sin(p2),
-    )
-    return np.degrees(l2), np.degrees(p2)
-
-
-# ---------------------------------------------------------------------------
-# mode dispatch — EngineConfig.geodesy: "wgs84" (default, geotools parity)
-# or "sphere" (haversine; the round-1 documented deviation, kept as a flag)
-# ---------------------------------------------------------------------------
-
-
-def geo_distance_m(lon1, lat1, lon2, lat2, mode: str = "wgs84"):
-    if mode == "wgs84":
-        return vincenty_inverse(lon1, lat1, lon2, lat2)[0]
-    return haversine_m(lon1, lat1, lon2, lat2)
-
-
-def geo_initial_bearing_deg(lon1, lat1, lon2, lat2, mode: str = "wgs84"):
-    if mode == "wgs84":
-        return vincenty_inverse(lon1, lat1, lon2, lat2)[1]
-    return initial_bearing_deg(lon1, lat1, lon2, lat2)
-
-
-def geo_destination_point(lon, lat, bearing_deg, dist_m, mode: str = "wgs84"):
-    if mode == "wgs84":
-        return vincenty_direct(lon, lat, bearing_deg, dist_m)
-    return destination_point(lon, lat, bearing_deg, dist_m)
-
-
 def clamp_azimuth(d):
     """Fold to (-180, 180]; mirrors OSMDataStore.clampAzimuth:669-679
     (Java % keeps the sign of the dividend — np.fmod matches)."""
@@ -254,8 +204,7 @@ def extract_point(lons: np.ndarray, lats: np.ndarray, index: float) -> tuple[flo
     )
 
 
-def bearing_at_index(lons: np.ndarray, lats: np.ndarray, index: float,
-                     mode: str = "wgs84") -> float:
+def bearing_at_index(lons: np.ndarray, lats: np.ndarray, index: float) -> float:
     """Two-point ε-probe bearing; mirrors OSMDataStore.getBearing:640-662
     (gc.getAzimuth on the ε-separated probe points)."""
     cum = planar_lengths(lons, lats)
@@ -269,7 +218,7 @@ def bearing_at_index(lons: np.ndarray, lats: np.ndarray, index: float,
         i0, i1 = index - eps / 2.0, index + eps / 2.0
     x0, y0 = extract_point(lons, lats, i0)
     x1, y1 = extract_point(lons, lats, i1)
-    return float(geo_initial_bearing_deg(x0, y0, x1, y1, mode))
+    return float(vincenty_inverse(x0, y0, x1, y1)[1])
 
 
 def offset_curve_np(lons: np.ndarray, lats: np.ndarray, offset_deg: float):
@@ -315,13 +264,3 @@ def offset_curve_np(lons: np.ndarray, lats: np.ndarray, offset_deg: float):
     out.append(b[-1])
     arr = np.asarray(out)
     return arr[:, 0].copy(), arr[:, 1].copy()
-
-
-def polyline_length_m(lons: np.ndarray, lats: np.ndarray, mode: str = "wgs84") -> float:
-    """Geodesic length: sum of per-edge distances
-    (mirrors the accumulation in OSMDataStore.getStreetSegments:544-556)."""
-    lons = np.asarray(lons, dtype=np.float64)
-    lats = np.asarray(lats, dtype=np.float64)
-    if len(lons) < 2:
-        return 0.0
-    return float(np.sum(geo_distance_m(lons[:-1], lats[:-1], lons[1:], lats[1:], mode)))

@@ -35,9 +35,9 @@ from ..functions.geodesy import (
     bearing_at_index,
     clamp_azimuth,
     extract_point,
-    geo_destination_point,
-    geo_distance_m,
     planar_lengths,
+    vincenty_direct,
+    vincenty_inverse,
 )
 from ..functions.ids import segment_id_py, tripline_id_py
 
@@ -172,10 +172,9 @@ def add_jumper(jumpers, start_index, end_index, j: Jumper):
     end_index.add((j.end_node, j.start_node))
 
 
-def build_network(nodes_df, ways_df, cfg: EngineConfig = EngineConfig()) -> Network:
+def build_network(nodes_df, ways_df) -> Network:
     """OSMDataStore.addOsm/getStreetSegments (OSMDataStore.java:345-424,
     516-592) + tripline creation (:594-612) + jumper build (:396-398)."""
-    mode = cfg.geodesy
     coords = {int(r.node_id): (float(r.lon), float(r.lat)) for r in nodes_df.itertuples()}
     ways = sorted(
         ((int(r.way_id), list(r.nodes), dict(r.tags)) for r in ways_df.itertuples()),
@@ -205,7 +204,7 @@ def build_network(nodes_df, ways_df, cfg: EngineConfig = EngineConfig()) -> Netw
                 last_node = node_id
             pt = coords[node_id]
             if last_pt is not None:
-                seg_dist += float(geo_distance_m(last_pt[0], last_pt[1], pt[0], pt[1], mode))
+                seg_dist += float(vincenty_inverse(last_pt[0], last_pt[1], pt[0], pt[1])[0])
             last_pt = pt
             seg_coords.append(pt)
             if len(seg_coords) > 1 and (node_id in intersections or i == len(nodes) - 1):
@@ -221,7 +220,7 @@ def build_network(nodes_df, ways_df, cfg: EngineConfig = EngineConfig()) -> Netw
                     seg = Segment(sid, way_id, a, b, lo, la, seg_dist, oneway, stype)
                     net.segments[sid] = seg
                     if seg_dist > MIN_SEGMENT_LEN:
-                        for tl in make_triplines(seg, mode):
+                        for tl in make_triplines(seg):
                             net.triplines.append(tl)
                     else:
                         add_jumper(net.jumpers, start_index, end_index,
@@ -244,7 +243,7 @@ def build_network(nodes_df, ways_df, cfg: EngineConfig = EngineConfig()) -> Netw
     return net
 
 
-def make_triplines(seg: Segment, mode: str = "wgs84") -> list[TripLine]:
+def make_triplines(seg: Segment) -> list[TripLine]:
     """OSMDataStore.createTripLine (OSMDataStore.java:381-395, 594-612):
     planar LengthIndexedLine placement scaled by planar/geodesic ratio,
     ε-probe bearing, ±90° destination points at 10 m."""
@@ -257,10 +256,10 @@ def make_triplines(seg: Segment, mode: str = "wgs84") -> list[TripLine]:
          seg.length_m - INTERSECTION_MARGIN_METERS),
     ):
         tl_index = 1 if dist == INTERSECTION_MARGIN_METERS else 2
-        bearing = bearing_at_index(seg.lons, seg.lats, index, mode)
+        bearing = bearing_at_index(seg.lons, seg.lats, index)
         px, py = extract_point(seg.lons, seg.lats, index)
-        rx, ry = geo_destination_point(px, py, float(clamp_azimuth(bearing + 90.0)), TRIPLINE_RADIUS, mode)
-        lx, ly = geo_destination_point(px, py, float(clamp_azimuth(bearing - 90.0)), TRIPLINE_RADIUS, mode)
+        rx, ry = vincenty_direct(px, py, float(clamp_azimuth(bearing + 90.0)), TRIPLINE_RADIUS)
+        lx, ly = vincenty_direct(px, py, float(clamp_azimuth(bearing - 90.0)), TRIPLINE_RADIUS)
         out.append(
             TripLine(
                 tripline_id=tripline_id_py(seg.segment_id, tl_index),

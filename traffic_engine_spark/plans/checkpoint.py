@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
+from ..config import DEFAULT_CONFIG, EngineConfig
+
 
 @dataclass
 class StageResult:
@@ -120,26 +122,27 @@ class CheckpointedPipeline:
 
 
 def run_checkpointed_pipeline(spark, images: DataFrame, triplines, segments,
-                              jumpers: DataFrame, root: str, fingerprint: str):
+                              jumpers: DataFrame, root: str, fingerprint: str,
+                              cfg: EngineConfig = DEFAULT_CONFIG):
     """The §3.1 pipeline cut at its process boundaries (SURVEY §3.1 notes):
-    decode/pairs → crossings → samples → histograms, each stage resumable."""
+    crossings → samples → histograms, each stage resumable.  The stages are
+    `match.run_pipeline`'s own composition, so the checkpointed run honours
+    every ``cfg`` switch the plain one does."""
     from . import match as M
     from . import stats as S
 
     cp = CheckpointedPipeline(spark, root)
     results = []
 
-    tl_index = M.tripline_cell_index(triplines)
-
     crossings, r1 = cp.run_stage(
         "crossings", fingerprint,
-        lambda: M.find_crossings(M.pair_fixes(M.decode_fixes(images)), tl_index),
+        lambda: M.run_pipeline(spark, images, triplines, segments, jumpers, cfg)[0],
     )
     results.append(r1)
 
     samples, r2 = cp.run_stage(
         "samples", fingerprint,
-        lambda: M.speed_samples(spark, crossings, segments, jumpers),
+        lambda: M.speed_samples(spark, crossings, segments, jumpers, cfg),
     )
     results.append(r2)
 

@@ -191,29 +191,33 @@ def _cross(ux: Column, uy: Column, vx: Column, vy: Column) -> Column:
 
 def find_crossings(
     pairs: DataFrame,
-    tripline_index: DataFrame,
-    broadcast_triplines: bool | None = None,
+    triplines: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """GPS pair ⋈ tripline on z18 tile (±1 margin), refined by the exact
     parametric intersection — all native columns (J1+J2).
 
-    ``broadcast_triplines=None`` (default) auto-selects by index size
-    against ``cfg.broadcast_dim_max_rows`` — the same CBO-substitute
+    The one place the J1 join strategy is decided.  The tripline cell
+    index is built here and broadcast while the triplines' memoised row
+    count ×9 fits ``cfg.broadcast_dim_max_rows`` — the same CBO-substitute
     pattern as the segment-dim gate below and the Viterbi cover gate
-    (hmm.py), so a planet-sized tripline index plans SMJ+salt without
-    caller knowledge.  The count is memoised on the index DataFrame;
-    callers that reuse one index object (or pass an explicit bool) pay
-    it once.
+    (hmm.py).  The count is memoised on the long-lived ``triplines``
+    table, so rebuilding a query over one network launches no Spark jobs.
+    Above the cap the join shuffles on the cell key: a batch probe salts
+    its hot cells (plans/skew.salted_join), a streaming probe joins plain.
 
     Returns one row per crossing *occurrence* (reference duplicate-hit
     semantics), with the matched (tile_x, tile_y) kept for the kernel's
     deterministic ordering (the reference's B-tree scan order,
     SpatialDataStore.java:165-177)."""
-    if broadcast_triplines is None:
-        broadcast_triplines = (
-            memo_rowcount(tripline_index) <= cfg.broadcast_dim_max_rows
-        )
+    # Cover bound: a ≤20 m tripline at z18 margin 0 covers a 2×2 tile
+    # window at city latitudes, but z18 tile ground width is ~152·cos(lat) m
+    # and drops below 20 m above |lat|≈82.4°, where a 3×3 window (9 cells)
+    # becomes reachable — the universal ×9 bound can never under-count the
+    # index and force-broadcast an over-cap relation (the failure this gate
+    # exists to prevent); mid-size indexes near the boundary take the
+    # tested shuffle branch instead.
+    broadcast = memo_rowcount(triplines) * 9 <= cfg.broadcast_dim_max_rows
     # narrow the probe row before the ~20× cover explode: every byte here is
     # multiplied by the fan-out (image_id in particular is dead weight — the
     # kernel keys on (trace_id, seq))
@@ -231,29 +235,27 @@ def find_crossings(
     # side keeps its tile_x/tile_y columns for the output
     packed_key = pack_xy(F.col("tile_x"), F.col("tile_y"))
     gps_cells = gps_cells.withColumn("_ck", packed_key)
-    tl_packed = tripline_index.withColumn("_ck", packed_key).drop("tile_x", "tile_y")
-    if broadcast_triplines:
+    tl_packed = (
+        tripline_cell_index(triplines).withColumn("_ck", packed_key).drop("tile_x", "tile_y")
+    )
+    if broadcast:
         j = gps_cells.join(F.broadcast(tl_packed), "_ck", "inner")
-    elif cfg.salt_smj_hot_cells and not gps_cells.isStreaming:
-        # NOTE the isStreaming guard: salted_join's hot-cell sampling runs
-        # count()/localCheckpoint on the probe at plan time, which throws
-        # AnalysisException on a streaming DataFrame.  Streams fall
-        # through to the plain join below with AQE as the skew backstop
-        # (stream_crossings broadcasts in practice; this keeps the SMJ
-        # branch usable rather than silently broken for streams).
-        # SMJ branch (tripline index above broadcast size): dense urban
-        # cells concentrate candidate rows on single shuffle tasks, and
-        # AQE skew-split alone still materialises the skewed map output
-        # first — salt hot cells explicitly (plans/skew.salted_join:
-        # deterministic probe-side salt, build-side replication; cold
-        # cells join plan-identically on salt 0).  Runs one sampling agg
-        # over the probe at plan time, same CBO-substitute contract as
-        # the segment-dim gate below.
+    elif gps_cells.isStreaming:
+        # salted_join's hot-cell sampling runs count()/localCheckpoint on
+        # the probe at plan time, which throws AnalysisException on a
+        # streaming DataFrame: streams join plain, with AQE as the skew
+        # backstop.
+        j = gps_cells.join(tl_packed, "_ck", "inner")
+    else:
+        # dense urban cells concentrate candidate rows on single shuffle
+        # tasks, and AQE skew-split alone still materialises the skewed map
+        # output first — salt hot cells explicitly (deterministic
+        # probe-side salt, build-side replication; cold cells join
+        # plan-identically on salt 0).  Runs one sampling agg over the
+        # probe at plan time, the same CBO-substitute contract as the gate.
         from .skew import salted_join
 
-        j = salted_join(gps_cells, tl_packed, ["_ck"], probe_key="seq", cfg=cfg)
-    else:
-        j = gps_cells.join(tl_packed, "_ck", "inner")
+        j = salted_join(gps_cells, tl_packed, ["_ck"], probe_key="seq")
 
     # J2 refine — LineSegment.intersectionDistance (LineSegment.java:17-43)
     rx, ry = F.col("lon") - F.col("p_lon"), F.col("lat") - F.col("p_lat")
@@ -530,7 +532,6 @@ def _jumper_samples_declarative(
 
 
 def offmap_traces(
-    spark: SparkSession,
     samples: DataFrame,
     segments: DataFrame,
     jumpers: DataFrame,
@@ -665,18 +666,7 @@ def run_pipeline(
     if cfg.apply_anonymity_gate:
         fixes = anonymity_gate(fixes)
     pairs = pair_fixes(fixes, cfg)
-    tl_index = tripline_cell_index(triplines)
-    # J1 broadcast gate via the long-lived triplines table (memoised across
-    # pipeline calls, unlike the per-call tl_index object).  Cover bound:
-    # a ≤20 m tripline at z18 margin 0 covers a 2×2 tile window at city
-    # latitudes, but z18 tile ground width is ~152·cos(lat) m and drops
-    # below 20 m above |lat|≈82.4°, where a 3×3 window (9 cells) becomes
-    # reachable — use the universal ×9 bound so the gate can never
-    # under-count the index and force-broadcast an over-cap relation (the
-    # failure this gate exists to prevent); mid-size indexes near the
-    # boundary take the tested SMJ+salt branch instead.
-    bcast = memo_rowcount(triplines) * 9 <= cfg.broadcast_dim_max_rows
-    crossings = find_crossings(pairs, tl_index, broadcast_triplines=bcast, cfg=cfg)
+    crossings = find_crossings(pairs, triplines, cfg)
     # NOTE: crossings already inherit the pairing window's hash(trace_id)
     # partitioning through the narrow join chain, so speed_samples could
     # skip its repartition — but that measured SLOWER (93s vs 68s at 8

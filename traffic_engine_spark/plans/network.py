@@ -2,8 +2,8 @@
 triplines, jumpers — as one batch Spark job.
 
 Shape of the job (scale notes inline):
-  1. explode way→node, join node coords (broadcast nodes at city scale;
-     sort-merge on node_id at planet scale — both are plain equi-joins).
+  1. explode way→node, join node coords (a plain equi-join: Spark picks
+     broadcast or sort-merge on node_id from the tables' statistics).
   2. intersection detection = hash aggregation (A1).
   3. per-way segment split + tripline geodesy inside ``applyInPandas``
      (numpy kernels from functions/geodesy.py — identical code to the
@@ -29,8 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import (
-    DEFAULT_CONFIG,
-    EngineConfig,
     INTERSECTION_MARGIN_METERS,
     MIN_SEGMENT_LEN,
     TRIPLINE_RADIUS,
@@ -39,9 +37,9 @@ from ..functions.geodesy import (
     bearing_at_index,
     clamp_azimuth,
     extract_point,
-    geo_destination_point,
-    geo_distance_m,
     planar_lengths,
+    vincenty_direct,
+    vincenty_inverse,
 )
 from ..functions.ids import segment_id_py, tripline_id_py
 from ..operators.graph import connected_components
@@ -77,7 +75,7 @@ TRIPLINE_SCHEMA = T.StructType(
 )
 
 
-def _split_way_batch(pdf: pd.DataFrame, mode: str = "wgs84") -> pd.DataFrame:
+def _split_way_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     """Per-way split at intersection nodes (OSMDataStore.java:516-592).
 
     Intersection-ness arrives as the per-node ``ninter`` flag array joined
@@ -96,7 +94,7 @@ def _split_way_batch(pdf: pd.DataFrame, mode: str = "wgs84") -> pd.DataFrame:
         stype = street_type_of(tags)
         # per-edge geodesic distances, one vectorised call per way
         edge_m = (
-            geo_distance_m(lons[:-1], lats[:-1], lons[1:], lats[1:], mode)
+            vincenty_inverse(lons[:-1], lats[:-1], lons[1:], lats[1:])[0]
             if len(lons) > 1 else np.zeros(0)
         )
         seg_dist, last_node, start_i = 0.0, nodes[0], 0
@@ -132,10 +130,7 @@ def _split_way_batch(pdf: pd.DataFrame, mode: str = "wgs84") -> pd.DataFrame:
     return pd.DataFrame(rows, columns=[f.name for f in SEGMENT_SCHEMA.fields])
 
 
-def build_segments(
-    spark: SparkSession, ways: DataFrame, nodes: DataFrame, broadcast_nodes: bool = True,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
+def build_segments(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     """ways(way_id, nodes:array<long>, tags:map) ⋈ nodes(node_id, lat, lon)
     → street segments.  Traffic-edge filter (F1) + intersection agg (A1)
     are native Spark; the sequential split runs per-way in applyInPandas."""
@@ -155,9 +150,8 @@ def build_segments(
         .select("node_id", F.lit(True).alias("is_inter"))
     )
 
-    n = F.broadcast(nodes) if broadcast_nodes else nodes
     with_coords = (
-        exploded.join(n, "node_id", "left")
+        exploded.join(nodes, "node_id", "left")
         .join(inters, "node_id", "left")
         .groupBy("way_id")
         .agg(
@@ -181,19 +175,16 @@ def build_segments(
         )
     )
 
-    mode = cfg.geodesy
-
     def run(pdf_iter):
         for pdf in pdf_iter:
-            yield _split_way_batch(pdf, mode)
+            yield _split_way_batch(pdf)
 
     return with_coords.mapInPandas(run, schema=SEGMENT_SCHEMA)
 
 
-def build_triplines(segments: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
+def build_triplines(segments: DataFrame) -> DataFrame:
     """Segments longer than MIN_SEGMENT_LEN get two triplines
     (OSMDataStore.java:381-395, createTripLine:594-612)."""
-    mode = cfg.geodesy
 
     def make(pdf_iter):
         for pdf in pdf_iter:
@@ -211,10 +202,10 @@ def build_triplines(segments: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> 
                     ),
                     start=1,
                 ):
-                    bearing = bearing_at_index(lons, lats, index, mode)
+                    bearing = bearing_at_index(lons, lats, index)
                     px, py = extract_point(lons, lats, index)
-                    rx, ry = geo_destination_point(px, py, float(clamp_azimuth(bearing + 90.0)), TRIPLINE_RADIUS, mode)
-                    lx, ly = geo_destination_point(px, py, float(clamp_azimuth(bearing - 90.0)), TRIPLINE_RADIUS, mode)
+                    rx, ry = vincenty_direct(px, py, float(clamp_azimuth(bearing + 90.0)), TRIPLINE_RADIUS)
+                    lx, ly = vincenty_direct(px, py, float(clamp_azimuth(bearing - 90.0)), TRIPLINE_RADIUS)
                     rows.append(
                         (tripline_id_py(s.segment_id, tl_index), s.segment_id,
                          tl_index, dist, float(lx), float(ly), float(rx), float(ry))
@@ -291,11 +282,11 @@ def build_jumpers(segments: DataFrame) -> DataFrame:
 
 
 def build_network_tables(
-    spark: SparkSession, ways: DataFrame, nodes: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
+    spark: SparkSession, ways: DataFrame, nodes: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Full network build → (segments, triplines, jumpers), each cached."""
-    segments = build_segments(spark, ways, nodes, cfg=cfg).cache()
-    triplines = build_triplines(segments, cfg=cfg).cache()
+    """Full network build → (segments, triplines, jumpers), each cached.
+    ``spark`` is unused; it stays for the callers that pass it first."""
+    segments = build_segments(ways, nodes).cache()
+    triplines = build_triplines(segments).cache()
     jumpers = build_jumpers(segments).cache()
     return segments, triplines, jumpers

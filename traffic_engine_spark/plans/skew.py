@@ -2,9 +2,11 @@
 scheduling, VehicleStates.java:188-227, recast as data-parallel salting).
 
 Dense urban cells concentrate candidate rows on few shuffle partitions.
-Strategy:
+plans/match.find_crossings salts its J1 shuffle join this way whenever the
+tripline index is too large to broadcast and the probe is a batch
+DataFrame.  Strategy:
   1. sample cell frequencies (one cheap agg);
-  2. cells above `skew_cell_fraction` of total get `salt_buckets` salts;
+  2. cells above `SKEW_CELL_FRACTION` of total get `SALT_BUCKETS` salts;
   3. the probe side salts rows round-robin (deterministic: hash of row
      key, not rand() — resumability requires it); the build side
      replicates hot-cell rows across all salts;
@@ -20,8 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.cells import morton_col, tile_x_col, tile_y_col
+
+# a cell holding more than this fraction of the probe rows is hot
+SKEW_CELL_FRACTION = 0.05
+# sub-keys each hot cell is salted into
+SALT_BUCKETS = 8
 
 
 def hot_cells(df: DataFrame, cell_cols: list[str], fraction: float) -> DataFrame:
@@ -45,7 +51,6 @@ def salted_join(
     build: DataFrame,
     cell_cols: list[str],
     probe_key: str,
-    cfg: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """Equi-join on cell cols with explicit salting of hot cells.
 
@@ -56,8 +61,8 @@ def salted_join(
     At volume, pre-pack multi-column cell keys into ONE long before calling
     (cell_cols=["_ck"]) — single-field join-key hashing measured 2× over a
     two-field key on the J1 join (BENCH.md)."""
-    B = cfg.salt_buckets
-    hot = hot_cells(probe, cell_cols, cfg.skew_cell_fraction).withColumn(
+    B = SALT_BUCKETS
+    hot = hot_cells(probe, cell_cols, SKEW_CELL_FRACTION).withColumn(
         "_hot", F.lit(True)
     )
     p = probe.join(F.broadcast(hot), cell_cols, "left").withColumn(

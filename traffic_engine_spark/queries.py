@@ -2174,7 +2174,7 @@ def traffic_offmap_traces(spark, sf_dir):
     from .plans import match as M
 
     images, segs, tls, jumpers, crossings, samples = _pipeline(spark)
-    traces = M.offmap_traces(spark, samples, segs, jumpers, M.decode_fixes(images))
+    traces = M.offmap_traces(samples, segs, jumpers, M.decode_fixes(images))
     pts = F.arrays_zip(F.col("lons").alias("lon"), F.col("lats").alias("lat"))
     return traces.select(
         "offmap_id", "trace_key", "trace_id", "start_id", "end_id", "t0", "t1",

@@ -68,7 +68,6 @@ from ..plans.match import (
     find_crossings,
     offmap_traces,
     pair_crossings,
-    tripline_cell_index,
 )
 
 # the fix-source DDL every entry point reads with (decode_fixes' output
@@ -200,7 +199,7 @@ def stream_crossings(
     result is the append-mode crossing log to persist as the silver table
     (CROSSING_SCHEMA = find_crossings' output shape)."""
     pairs = pair_fixes_stream(fixes_stream, cfg)
-    return find_crossings(pairs, tripline_cell_index(triplines), cfg=cfg)
+    return find_crossings(pairs, triplines, cfg)
 
 
 CROSSING_SCHEMA = (
@@ -406,7 +405,7 @@ def offmap_traces_from_stream(
     which is exactly this bronze→silver shape.  Batch==stream parity:
     tests/test_infra.py::test_streaming_offmap_matches_batch."""
     samples = spark.createDataFrame(streamed_samples_pd, schema=SAMPLE_SCHEMA)
-    return offmap_traces(spark, samples, segments, jumpers, fixes)
+    return offmap_traces(samples, segments, jumpers, fixes)
 
 
 # ---------------------------------------------------------------------------
