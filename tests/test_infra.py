@@ -381,7 +381,7 @@ def test_streaming_gate_then_kernel_composition(spark, spark_network, images_pd,
     """The documented bronze→silver composition of the two stateful
     operators (one per query): anonymity release gate → parquet silver →
     per-trace kernel.  End-to-end output must equal the batch pipeline
-    with the gate enabled."""
+    with the gate enabled, which differs from the ungated pipeline."""
     from traffic_engine_spark.config import EngineConfig
     from traffic_engine_spark.streaming.match_stream import (
         CROSSING_SCHEMA,
@@ -391,12 +391,21 @@ def test_streaming_gate_then_kernel_composition(spark, spark_network, images_pd,
     )
 
     segs, tls, jumpers = spark_network
-    images = spark.createDataFrame(images_pd)
+    # the first 13 traces: one of the city's two z11 tiles is seen by 9 of
+    # them (gated out), the other by 10 (released); on the full city both
+    # tiles pass the gate and it drops nothing
+    trace = images_pd["caption"].str.extract(r"trace=(\d+);")[0].astype(int)
+    images = spark.createDataFrame(images_pd[trace < 13])
     fixes_pd = M.decode_fixes(images).toPandas()
 
     gate_cfg = EngineConfig(apply_anonymity_gate=True)
     _, batch_samples = M.run_pipeline(spark, images, tls, segs, jumpers, gate_cfg)
     want = batch_samples.toPandas()
+    ungated = M.run_pipeline(spark, images, tls, segs, jumpers)[1].toPandas()
+    key = ["trace_id", "segment_id", "time", "speed", "source"]
+    assert not want[key].sort_values(key).reset_index(drop=True).equals(
+        ungated[key].sort_values(key).reset_index(drop=True)
+    )
     n_gated = M.anonymity_gate(M.decode_fixes(images)).count()
 
     src = str(tmp_path / "src"); silver = str(tmp_path / "silver")
@@ -1534,6 +1543,28 @@ def test_empty_inputs_dedup_ann_viterbi(spark, spark_network):
     out = hmm.viterbi_match(fixes, segs)
     assert out.count() == 0
     assert [f.split(" ")[0] for f in hmm.MATCH_SCHEMA.split(", ")] == list(out.columns)
+
+
+def test_brute_topk_query_cap_bounds_collect(spark, monkeypatch):
+    """Over the cap, brute_topk raises having collected at most
+    max_query_rows + 1 query rows, not the whole query block."""
+    from traffic_engine_spark.operators import ann as A
+
+    emb = spark.range(200).select(
+        F.col("id").alias("vec_id"), F.array(F.rand(1), F.rand(2)).alias("embedding")
+    )
+    collected = []
+    to_pandas = type(emb).toPandas
+
+    def spy(df):
+        pdf = to_pandas(df)
+        collected.append(len(pdf))
+        return pdf
+
+    monkeypatch.setattr(type(emb), "toPandas", spy)
+    with pytest.raises(ValueError, match="max_query_rows=10"):
+        A.brute_topk(emb, emb, k=3, max_query_rows=10)
+    assert collected == [11]
 
 
 def test_asof_join_operator(spark):

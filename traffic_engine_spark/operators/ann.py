@@ -64,16 +64,17 @@ def brute_topk(
 
     r5 shape (broadcast join + per-pair interpreted HOF dot) measured
     53.9 s at sf1.0; the matmul path computes the identical result from
-    the same 5·10⁸ pairs in ~2 s.  ``max_query_rows`` guards the driver
-    collect of the query block (the corpus side stays distributed)."""
+    the same 5·10⁸ pairs in ~2 s.  ``max_query_rows`` bounds the driver
+    collect of the query block at ``max_query_rows + 1`` rows (the corpus
+    side stays distributed)."""
     qpd = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).toPandas()
+    ).limit(max_query_rows + 1).toPandas()
     if len(qpd) > max_query_rows:
         raise ValueError(
             f"brute_topk collects the query block to rank against every "
-            f"corpus partition: {len(qpd)} queries > max_query_rows="
-            f"{max_query_rows}; use lsh_topk / ivf_search at this scale"
+            f"corpus partition: more than max_query_rows={max_query_rows} "
+            f"queries; use lsh_topk / ivf_search at this scale"
         )
     spark = corpus.sparkSession
     out_schema = "query_id long, rank int, neighbor_id long, cosine double"
