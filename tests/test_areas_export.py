@@ -151,26 +151,23 @@ def test_welch_strict_parity_sd1_substitution_scope(spark):
     assert strict["t_crit"] == fixed["t_crit"]
 
 
-def test_geojson_gate_routes_large_networks_distributed(spark, spark_network, tmp_path):
-    """VERDICT r4 #4: above cfg.broadcast_dim_max_rows segments_to_geojson
+def test_geojson_gate_routes_large_networks_distributed(spark, spark_network, tmp_path,
+                                                        monkeypatch):
+    """VERDICT r4 #4: above GEOJSON_DRIVER_MAX_ROWS segments_to_geojson
     must NOT collect to the driver — it routes to the per-tile JSONL
     writer (path required) and the distributed offset_display matches the
     driver path's geometry per segment."""
-    import dataclasses
-
-    from traffic_engine_spark.config import DEFAULT_CONFIG
-
     segs, _, _ = spark_network
-    tiny = dataclasses.replace(DEFAULT_CONFIG, broadcast_dim_max_rows=3)
+    monkeypatch.setattr(EX, "GEOJSON_DRIVER_MAX_ROWS", 3)
 
     # over the gate without a path: loud refusal, no silent collect
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="driver-assembly gate"):
-        EX.segments_to_geojson(segs, cfg=tiny)
+        EX.segments_to_geojson(segs)
 
     out = str(tmp_path / "gj_auto")
-    ret = EX.segments_to_geojson(segs, out, offset_display=True, cfg=tiny)
+    ret = EX.segments_to_geojson(segs, out, offset_display=True)
     assert ret == out
     dist = {
         json.loads(r.value)["properties"]["segment_id"]:
@@ -179,6 +176,7 @@ def test_geojson_gate_routes_large_networks_distributed(spark, spark_network, tm
     }
     # driver path (default gate) on the same table: identical geometry,
     # including the two-way display offset
+    monkeypatch.undo()
     doc = json.loads(EX.segments_to_geojson(segs, offset_display=True))
     assert len(dist) == len(doc["features"]) == segs.count()
     for f in doc["features"]:

@@ -1,7 +1,8 @@
-"""Checkpoint/resume, skew salting, streaming kernel, and operator tests
-beyond the core parity suite."""
+"""Checkpoint/resume, spatial partitioning, streaming kernel, and operator
+tests beyond the core parity suite."""
 
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -80,27 +81,6 @@ def test_checkpointed_pipeline_honours_cfg(tmp_path, spark, pipeline_inputs, ima
     assert len(want) > 0
     pd.testing.assert_frame_equal(got, want.astype(got.dtypes.to_dict()), check_exact=True)
     assert not want.equals(ungated)
-
-
-def test_salted_join_matches_plain_join(spark, images_pd):
-    images = spark.createDataFrame(images_pd)
-    fixes = M.decode_fixes(images)
-    from traffic_engine_spark.functions.cells import tile_x_col, tile_y_col
-
-    pts = fixes.select(
-        "image_id",
-        tile_x_col(F.col("lon"), 14).alias("cx"),
-        tile_y_col(F.col("lat"), 14).alias("cy"),
-    )
-    build = pts.select(F.col("image_id").alias("other_id"), "cx", "cy")
-    plain = pts.join(build, ["cx", "cy"]).groupBy("image_id").count().toPandas()
-    salted = (
-        SK.salted_join(pts, build, ["cx", "cy"], probe_key="image_id")
-        .groupBy("image_id").count().toPandas()
-    )
-    a = plain.sort_values("image_id").reset_index(drop=True)
-    b = salted.sort_values("image_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
 def test_repartition_by_morton_orders_spatially(spark, images_pd):
@@ -669,38 +649,32 @@ def test_planet_mode_pipeline_identical_no_collect(spark, city, images_pd, monke
 
 
 def test_jumper_dim_broadcast_gate(spark, spark_network, images_pd):
-    """Above cfg.broadcast_dim_max_rows the jumper-pass segment-dim joins
-    must fall back to sort-merge (no driver-size broadcast of a planet
-    dim) with IDENTICAL output; at the default gate they broadcast."""
-    from traffic_engine_spark.config import EngineConfig
-
+    """The jumper-pass segment-dim joins are Spark's to size: at the
+    session threshold they broadcast (no sort-merge join anywhere in the
+    pipeline); with the threshold off they fall back to sort-merge — the
+    plan a planet-size segment dim gets — with IDENTICAL output."""
     segs, tls, jumpers = spark_network
     images = spark.createDataFrame(images_pd)
 
-    # kill the optimizer's own small-table broadcasting so the plans show
-    # exactly what the engine's explicit hint (and only it) buys — at test
-    # scale Spark would otherwise statically broadcast the tiny dim either
-    # way, which is precisely what planet-size stats would NOT do
+    _, s_bc = M.run_pipeline(spark, images, tls, segs, jumpers)
+    plan_bc = s_bc._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"BroadcastHashJoin \[prev_seg#", plan_bc), plan_bc
+    assert "SortMergeJoin" not in plan_bc
+
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        _, s_bc = M.run_pipeline(spark, images, tls, segs, jumpers, EngineConfig())
-        plan_bc = s_bc._jdf.queryExecution().executedPlan().toString()
-        # the jumper dim is ALWAYS broadcast-hinted, so asserting a BHJ
-        # exists would be vacuous — pin the gate by the absence of any SMJ
-        assert "SortMergeJoin" not in plan_bc
-
-        _, s_smj = M.run_pipeline(
-            spark, images, tls, segs, jumpers, EngineConfig(broadcast_dim_max_rows=0)
-        )
+        _, s_smj = M.run_pipeline(spark, images, tls, segs, jumpers)
         plan_smj = s_smj._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan_smj
+        b = s_smj.toPandas()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+    assert re.search(r"SortMergeJoin \[prev_seg#", plan_smj), plan_smj
+    assert re.search(r"SortMergeJoin \[segment_id#", plan_smj), plan_smj
 
     key = ["trace_id", "segment_id", "time", "speed", "source"]
     a = s_bc.toPandas()[key].sort_values(key).reset_index(drop=True)
-    b = s_smj.toPandas()[key].sort_values(key).reset_index(drop=True)
+    b = b[key].sort_values(key).reset_index(drop=True)
     assert len(a) > 0
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
@@ -1610,12 +1584,10 @@ def test_store_op_id_seen_across_instances(spark, tmp_path):
 
 
 def test_find_crossings_smj_plans_on_stream(spark, spark_network, images_pd, tmp_path):
-    """The shuffle branch of the J1 join (tripline index over the broadcast
-    cap) salts hot cells with a plan-time sampling job, which throws
-    AnalysisException on a streaming DataFrame.  A streaming probe must
-    take the plain join instead — planning (and running one microbatch)
-    succeeds and matches the batch crossings."""
-    from traffic_engine_spark.config import EngineConfig
+    """The shuffle path of the J1 join (broadcast threshold off, the plan
+    an index too large to broadcast gets) plans and runs on a streaming
+    probe — the same plain join as a batch probe — and one availableNow
+    run matches the batch crossings exactly."""
     from traffic_engine_spark.streaming.match_stream import (
         FIX_SCHEMA,
         pair_fixes_stream,
@@ -1626,23 +1598,37 @@ def test_find_crossings_smj_plans_on_stream(spark, spark_network, images_pd, tmp
     src = str(tmp_path / "smj_src"); os.makedirs(src)
     fixes_pd.to_parquet(os.path.join(src, "all.parquet"), index=False)
 
-    pairs = pair_fixes_stream(
-        spark.readStream.schema(FIX_SCHEMA).parquet(src)
-    )
-    # plan-time: this line raises AnalysisException if a stream is salted
-    cr = M.find_crossings(pairs, tls, EngineConfig(broadcast_dim_max_rows=0))
     out = str(tmp_path / "smj_silver")
-    q = (
-        cr.writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", str(tmp_path / "smj_ck"))
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    _poll_stream(spark, q)
-    got = spark.read.parquet(out).toPandas()
+    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pairs = pair_fixes_stream(
+            spark.readStream.schema(FIX_SCHEMA).parquet(src)
+        )
+        cr = M.find_crossings(pairs, tls)
+        q = (
+            cr.writeStream.format("parquet").option("path", out)
+            .option("checkpointLocation", str(tmp_path / "smj_ck"))
+            .outputMode("append").trigger(availableNow=True).start()
+        )
+        _poll_stream(spark, q)
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+    assert re.search(r"(SortMergeJoin|ShuffledHashJoin) \[_ck#\d+L\]", plan), plan
+    key = ["trace_id", "seq", "time", "segment_id", "tripline_index",
+           "tripline_id", "tile_x", "tile_y"]
+    got = spark.read.parquet(out).toPandas()[key]
     want = M.find_crossings(
         M.pair_fixes(M.decode_fixes(spark.createDataFrame(images_pd))), tls
-    ).toPandas()
-    assert len(got) == len(want)
+    ).toPandas()[key]
+    assert len(want) > 0
+    # the stream's pair counter is a long, the batch row_number an int
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        want.astype(got.dtypes.to_dict()).sort_values(key).reset_index(drop=True),
+        check_exact=True,
+    )
 
 
 def test_iceberg_backend_sql_shapes(spark):

@@ -1,11 +1,12 @@
 """Partitioning-invariance: results must not depend on the shuffle layout.
 
-On a 1000-executor cluster the partition count, AQE coalescing, and skew
-salting all differ run-to-run and cluster-to-cluster; any operator whose
-OUTPUT depends on them (window ties resolved by partition order, LSH
-band buckets keyed by task id, salting that leaks into results, kNN ring
-escalation whose residual set depends on layout) is silently wrong at
-scale even when it matches the oracle at one fixed local layout.
+On a 1000-executor cluster the partition count, AQE coalescing and
+skew-join splitting, and Spark's broadcast-or-shuffle choice for each join
+all differ run-to-run and cluster-to-cluster; any operator whose OUTPUT
+depends on them (window ties resolved by partition order, LSH band
+buckets keyed by task id, kNN ring escalation whose residual set depends
+on layout) is silently wrong at scale even when it matches the oracle at
+one fixed local layout.
 
 This runs a representative entry per operator family twice in the same
 session — once at the suite's shuffle.partitions=8, once at 3 (runtime-
@@ -25,7 +26,7 @@ from traffic_engine_spark import queries as Q
 SF = "/root/testdata/sf0.001"
 
 # one per family: state machine, spatial joins + escalation, windows/ties,
-# skew gate (salting), LSH band-bucketing (minhash + embedding), sketch,
+# anonymity gate, LSH band-bucketing (minhash + embedding), sketch,
 # sampling, HMM kernel, multimodal
 ENTRIES = [
     "traffic_crossings",

@@ -146,20 +146,17 @@ def test_rollup_yardstick_consistent_with_twin(spark):
     assert {"l_returnflag", "l_linestatus"} <= set(agg.columns)
 
 
-def test_knn_cells_brute_fallback_gate_unbroadcastable(spark, monkeypatch):
+def test_knn_cells_brute_fallback_gate_unbroadcastable(spark):
     """ADVICE r4: when the unresolved residual is NOT a sliver (here: fewer
     stations than k leaves every point unproven), the brute fallback must
-    not force-broadcast it.  Shrink the gate so the 40-point residual is
-    over-threshold and check the partitioned nested-loop path is taken and
-    stays exact."""
-    import dataclasses
+    not force-broadcast it.  With the session's broadcast threshold off
+    (the residual stands in for one over it) the residual must run as a
+    partitioned cross join and stay exact."""
+    import re
 
     import pandas as pd
 
     from traffic_engine_spark.operators import spatial
-
-    tiny = dataclasses.replace(spatial.DEFAULT_CONFIG, broadcast_dim_max_rows=8)
-    monkeypatch.setattr(spatial, "DEFAULT_CONFIG", tiny)
 
     pts = pd.DataFrame({
         "point_id": range(40),
@@ -172,17 +169,22 @@ def test_knn_cells_brute_fallback_gate_unbroadcastable(spark, monkeypatch):
         "lon": [-122.05, -121.0],
     })
     p, s = spark.createDataFrame(pts), spark.createDataFrame(stations)
-    out = spatial.knn_join_cells(p, s, zoom=12, ring=1, k=3, max_ring=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try:
+        out = spatial.knn_join_cells(p, s, zoom=12, ring=1, k=3, max_ring=4)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        cells = out.toPandas()
+    finally:
+        spark.conf.set(threshold, old)
     # the RESIDUAL (the RDD-backed `remaining` point set) must not be the
-    # broadcast build side; Spark is free to broadcast the tiny station dim
-    import re
-
+    # broadcast build side
     m = re.search(
         r"BroadcastExchange[^\n]*\n[^\n]*ExistingRDD\[point_id", plan
     )
     assert m is None, plan
-    cells = out.toPandas()
+    assert "CartesianProduct" in plan, plan
     brute = spatial.knn_join_broadcast(p, s, k=3).toPandas()
     cols = sorted(brute.columns)
     a = brute[cols].sort_values(cols).reset_index(drop=True)

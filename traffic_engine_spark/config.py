@@ -8,8 +8,9 @@ SURVEY.md Appendix B.  Every value cites the file:line in
 reference's *quirks* (latent unit bugs we reproduce bit-for-bit by
 default) versus the "fixed" variants — see SURVEY.md §7.4;
 ``convert_to_localtime`` and ``apply_anonymity_gate`` are the reference's
-own switches; ``broadcast_dim_max_rows`` sizes broadcasts to executor
-memory.  Join strategies are the engine's choice, not the caller's.
+own switches.  Join strategies are Spark's choice, not the caller's: the
+planner sizes every dim join against the session's
+``spark.sql.autoBroadcastJoinThreshold`` (session.get_spark).
 """
 
 from __future__ import annotations
@@ -67,20 +68,11 @@ BEARING_EPSILON_DEG = 0.000009      # two-point probe   (osm/OSMDataStore.java:6
 @dataclass(frozen=True)
 class EngineConfig:
     """Runtime knobs for the Spark engine: three switches from the
-    reference and one executor-memory sizing limit."""
+    reference."""
 
     strict_parity: bool = True       # reproduce reference quirks (SURVEY §7.4)
     convert_to_localtime: bool = True  # GPSPoint.convertToLocaltime (GPSPoint.java:22)
     apply_anonymity_gate: bool = False  # MINIMUM_VEHICLE_COUNT cell gating (W3)
-    # Dimension tables at or below this row count get an explicit
-    # broadcast hint where the fact side has no plan-time statistics
-    # (e.g. kernel mapInPandas output): AQE's runtime SMJ->BHJ conversion
-    # still pays the fact side's shuffle write, measured +28% on the
-    # 53M-row scaling job.  ~4M rows of (id, node) longs = ~64 MB
-    # broadcast — comfortable on real executors; above it, sort-merge.
-    # The J1 tripline cell index (plans/match.find_crossings) is gated
-    # against the same limit.
-    broadcast_dim_max_rows: int = 4_000_000
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -174,10 +174,10 @@ def minhash_lsh_pairs(
         buckets.select(F.explode(pair_combos).alias("p"))
         .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
         .distinct()
-        # candidates are tiny; materialise them (lazily — plan
-        # construction stays side-effect-free) so the signature chain runs
-        # exactly once (it would otherwise re-run for the broadcast
-        # cand_ids subquery AND the verify join)
+        # candidates are tiny; materialise them so the signature chain
+        # runs exactly once (it would otherwise re-run for the broadcast
+        # cand_ids subquery AND the verify join).  Not lazy under AQE:
+        # the call runs the distinct's shuffle-map stages at once
         .localCheckpoint(eager=False)
     )
     # exact verify — shingle sets computed only for candidate docs
@@ -191,9 +191,10 @@ def minhash_lsh_pairs(
             "doc_id",
             F.array_distinct(shingles_from_tokens(F.col("toks"), shingle_k)).alias("sh"),
         )
-        # tiny (≤ 2·|cand| docs) — materialise once (lazily) so the two
+        # tiny (≤ 2·|cand| docs) — materialise once so the two
         # broadcast verify sides don't each re-run the candidate
-        # tokenisation
+        # tokenisation.  Not lazy under AQE: the call runs its input's
+        # shuffle-map stages (the cand_ids distinct) at once
         .localCheckpoint(eager=False)
     )
     verified = (
@@ -571,7 +572,9 @@ def ngram_jaccard_prefix_pairs(
     )
     # the tokenise+shingle projection is the expensive pass (BENCH.md) and
     # feeds FOUR consumers below (df agg, prefix probe, both verify
-    # joins): materialise it once — lazy, so no extra job
+    # joins): materialise it once.  No job at call time only while
+    # `docs` holds no shuffle: under AQE the call runs its input's
+    # shuffle-map stages at once
     sh = sh.localCheckpoint(eager=False)
     ex = sh.select(
         *block_cols, "doc_id", F.size("sh").alias("sz"), F.explode("sh").alias("s")
@@ -650,8 +653,9 @@ def contamination_near_dup_pairs(
         .join(F.broadcast(bands_of(eval_docs, "eval_doc_id")), ["band", "bkey"])
         .select("eval_doc_id", "train_doc_id")
         .distinct()
-        # reuse-only materialisation — lazy, so building the operator
-        # stays free of cluster jobs
+        # reuse-only materialisation.  Not lazy under AQE: the call runs
+        # the distinct's shuffle-map stages at once, so building the
+        # operator launches jobs
         .localCheckpoint(eager=False)
     )
 
@@ -976,10 +980,9 @@ def embedding_lsh_pairs(
     (`lsh_auto_bands`): band cardinality grows with the corpus so
     candidate pairs stay ~linear in n, band count holds ~95% recall at
     ``min_cosine``.  The auto path runs one count() on the input at plan
-    construction (a deliberate CBO-style statistics job, like the segment
-    dim gate in plans/match); pass both explicitly to stay lazy and
-    pinned (the registered driver entry does, so its DuckDB oracle stays
-    byte-stable)."""
+    construction (a deliberate statistics job); pass both explicitly to
+    stay lazy and pinned (the registered driver entry does, so its DuckDB
+    oracle stays byte-stable)."""
     if band_planes is None or n_bands is None:
         auto_r, auto_l = lsh_auto_bands(emb.count(), min_cosine)
         band_planes = auto_r if band_planes is None else band_planes

@@ -15,9 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import DEFAULT_CONFIG
 from ..functions.cells import grid_disk_offsets, pack_xy, tile_x_col, tile_y_col
-from ..util import memo_rowcount
 
 
 def equirect_dist2(lat_a, lon_a, lat_b, lon_b):
@@ -253,15 +251,13 @@ def knn_join_cells(
             # be trusted here (k-th neighbour arbitrarily far / fewer than
             # k stations).  `remaining` is *usually* a sliver, but when
             # there are fewer than k stations overall (or a huge sparse
-            # region) it can be the whole points table — so the broadcast
-            # is size-gated like every other dim in the engine; above the
-            # gate the residual runs as a partitioned nested-loop cross
-            # join (no driver-side materialisation).
-            rem = remaining
-            if memo_rowcount(remaining) <= DEFAULT_CONFIG.broadcast_dim_max_rows:
-                rem = F.broadcast(remaining)
+            # region) it can be the whole points table — so the cross
+            # join carries no hint: Spark broadcasts the residual while
+            # its estimate fits the session threshold, and above it runs
+            # a partitioned cartesian product (no driver-side
+            # materialisation).
             scored = (
-                s_base.join(rem)
+                s_base.join(remaining)
                 .withColumn(
                     "dist2",
                     equirect_dist2(
@@ -288,8 +284,9 @@ def knn_join_cells(
             .withColumn("_kd", F.max("dist2").over(wp))
             .withColumn("_ok", (F.col("_n") == k) & (F.col("_kd") < guarantee))
             .localCheckpoint(eager=False)  # ≤ k rows/point; reused for
-            # sat + residual — lazy: materialises during the isEmpty
-            # action below, no separate eager pass
+            # sat + residual.  Not lazy under AQE: the call runs its
+            # input's shuffle-map stages at once, and the rows are then
+            # materialised by the isEmpty action below
         )
         sat = cand.filter(F.col("_ok")).select(*out_cols)
         out = sat if out is None else out.unionByName(sat)

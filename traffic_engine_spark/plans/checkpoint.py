@@ -142,7 +142,7 @@ def run_checkpointed_pipeline(spark, images: DataFrame, triplines, segments,
 
     samples, r2 = cp.run_stage(
         "samples", fingerprint,
-        lambda: M.speed_samples(spark, crossings, segments, jumpers, cfg),
+        lambda: M.speed_samples(spark, crossings, segments, jumpers),
     )
     results.append(r2)
 

@@ -13,9 +13,11 @@ decode (functions/viterbi.py, Newson & Krumm 2009 shape) runs inside one
 Scale shape: the pairing is one bounded-key equi-join (candidates per
 fix = segments covering a 3×3 z18 ring — city-block density), the
 shuffle key is trace_id, and the kernel is numpy over Arrow batches.
-Dense-cell skew is the same axis the pipeline already handles
-(plans/skew.salted_join on the packed key); a trace's candidate rows are
-O(fixes × ring density), never O(network).
+The cover dim's join strategy is Spark's: it broadcasts while the segment
+table's size estimate fits the session's broadcast threshold, and above
+it shuffles on the packed key with AQE's skew-join splitting dense
+cells.  A trace's candidate rows are O(fixes × ring density), never
+O(network).
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG
 from ..functions.cells import explode_bbox_cover, pack_xy, tile_x_col, tile_y_col
 from ..functions.viterbi import (
     M_PER_DEG,
@@ -33,7 +34,6 @@ from ..functions.viterbi import (
     point_segment_dist_m_np,
     viterbi_decode_batch_np,
 )
-from ..util import memo_rowcount
 
 MATCH_SCHEMA = (
     "trace_id long, seq long, ts long, segment_id long, dist_m double"
@@ -59,23 +59,11 @@ def _segment_cover(segments: DataFrame) -> DataFrame:
     )
 
 
-def _pruned_candidates(
-    fixes: DataFrame, segments: DataFrame, k: int, cfg=DEFAULT_CONFIG
-) -> DataFrame:
+def _pruned_candidates(fixes: DataFrame, segments: DataFrame, k: int) -> DataFrame:
     """The JVM half of the matcher: ring-join candidate pairing + the
     conservative per-fix top-k prune, everything codegen — the exact rows
     that cross the Arrow boundary into the kernel."""
     cover = _segment_cover(segments)
-    # size-gate an explicit broadcast hint on the cover dim: a
-    # materialized (localCheckpoint/RDD-backed) segment table carries no
-    # plan-time statistics, so without the hint Spark falls back to
-    # sort-merge and shuffles the whole fix side — the same
-    # no-stats-on-the-fact-side trap as the seg-dim gate in plans/match
-    # (cfg.broadcast_dim_max_rows).  The count is memoised per segments
-    # DataFrame (util.memo_rowcount), shared with that gate.
-    # ~13 cover rows/segment (bbox ±1 ring): stay under the dim cap
-    if memo_rowcount(segments) * 13 <= cfg.broadcast_dim_max_rows:
-        cover = F.broadcast(cover)
     # non-finite coordinates (decode_fixes' try_cast admits 'NaN' and
     # 'Infinity' captions) are garbage for matching AND poison fix
     # identity (NaN != NaN splits runs while the oracle's drop_duplicates
@@ -174,7 +162,6 @@ def viterbi_match(
     sigma_m: float = 25.0,
     trans_adj: float = 1.0,
     trans_jump: float = 10.0,
-    cfg=DEFAULT_CONFIG,
 ) -> DataFrame:
     """(trace_id, seq, ts, segment_id, dist_m): the Viterbi-decoded
     segment per GPS fix (segment_id -1 where no segment covers the fix's
@@ -185,7 +172,7 @@ def viterbi_match(
     the test oracle — output is independent of partitioning and
     parallelism (test_viterbi_partitioning_invariant).
     """
-    cand = _pruned_candidates(fixes, segments, k, cfg=cfg)
+    cand = _pruned_candidates(fixes, segments, k)
 
     # mapInPandas over the trace-hash-partitioned candidates, NOT a
     # per-trace applyInPandas: one vectorised pass handles every trace in

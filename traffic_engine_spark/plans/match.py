@@ -4,8 +4,9 @@ machine → speed samples.
 
 Plan shape (exactly three exchanges, SURVEY §3.1):
   (a) window shuffle on trace_id (pairing — reused by the kernel),
-  (b) the J1 join — *broadcast* of the tripline cell index (no shuffle of
-      the big side) when the network fits, sort-merge on cell otherwise,
+  (b) the J1 join on the packed cell key — Spark's planner sizes it: a
+      broadcast of the tripline cell index while its estimate fits
+      ``spark.sql.autoBroadcastJoinThreshold``, a shuffle join otherwise,
   (c) the final histogram groupBy.
 
 Hot-path discipline:
@@ -42,7 +43,6 @@ from ..config import (
 from ..functions.binning import coerce_ms_col
 from ..functions.ids import tripline_id_py
 from ..functions.cells import explode_bbox_cover, pack_xy, tile_x_col, tile_y_col
-from ..util import memo_rowcount
 
 # ---------------------------------------------------------------------------
 # stage 1 — geotag decode (caption is authoritative; FIXTURES.md §1)
@@ -189,35 +189,26 @@ def _cross(ux: Column, uy: Column, vx: Column, vy: Column) -> Column:
     return ux * vy - uy * vx
 
 
-def find_crossings(
-    pairs: DataFrame,
-    triplines: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
+def find_crossings(pairs: DataFrame, triplines: DataFrame) -> DataFrame:
     """GPS pair ⋈ tripline on z18 tile (±1 margin), refined by the exact
     parametric intersection — all native columns (J1+J2).
 
-    The one place the J1 join strategy is decided.  The tripline cell
-    index is built here and broadcast while the triplines' memoised row
-    count ×9 fits ``cfg.broadcast_dim_max_rows`` — the same CBO-substitute
-    pattern as the segment-dim gate below and the Viterbi cover gate
-    (hmm.py).  The count is memoised on the long-lived ``triplines``
-    table, so rebuilding a query over one network launches no Spark jobs.
-    Above the cap the join shuffles on the cell key: a batch probe salts
-    its hot cells (plans/skew.salted_join), a streaming probe joins plain.
+    The tripline cell index is built here and joined on one packed cell
+    key, for batch and streaming probes alike.  The strategy is Spark's:
+    the planner broadcasts the index while its size estimate fits
+    ``spark.sql.autoBroadcastJoinThreshold`` (cached, checkpointed and
+    parquet-read networks all carry statistics), and above it the join is
+    a shuffle join whose hot cells AQE's skew-join splits.  Building the
+    join launches no Spark job.  The index's size estimate is the
+    triplines' own: Spark does not scale it by the cover fan-out (1.2
+    index rows per tripline measured on a synthetic city, at most 4 below
+    |lat| 82.4° and at most 9 above, where a z18 tile is narrower than a
+    tripline).
 
     Returns one row per crossing *occurrence* (reference duplicate-hit
     semantics), with the matched (tile_x, tile_y) kept for the kernel's
     deterministic ordering (the reference's B-tree scan order,
     SpatialDataStore.java:165-177)."""
-    # Cover bound: a ≤20 m tripline at z18 margin 0 covers a 2×2 tile
-    # window at city latitudes, but z18 tile ground width is ~152·cos(lat) m
-    # and drops below 20 m above |lat|≈82.4°, where a 3×3 window (9 cells)
-    # becomes reachable — the universal ×9 bound can never under-count the
-    # index and force-broadcast an over-cap relation (the failure this gate
-    # exists to prevent); mid-size indexes near the boundary take the
-    # tested shuffle branch instead.
-    broadcast = memo_rowcount(triplines) * 9 <= cfg.broadcast_dim_max_rows
     # narrow the probe row before the ~20× cover explode: every byte here is
     # multiplied by the fan-out (image_id in particular is dead weight — the
     # kernel keys on (trace_id, seq))
@@ -238,24 +229,7 @@ def find_crossings(
     tl_packed = (
         tripline_cell_index(triplines).withColumn("_ck", packed_key).drop("tile_x", "tile_y")
     )
-    if broadcast:
-        j = gps_cells.join(F.broadcast(tl_packed), "_ck", "inner")
-    elif gps_cells.isStreaming:
-        # salted_join's hot-cell sampling runs count()/localCheckpoint on
-        # the probe at plan time, which throws AnalysisException on a
-        # streaming DataFrame: streams join plain, with AQE as the skew
-        # backstop.
-        j = gps_cells.join(tl_packed, "_ck", "inner")
-    else:
-        # dense urban cells concentrate candidate rows on single shuffle
-        # tasks, and AQE skew-split alone still materialises the skewed map
-        # output first — salt hot cells explicitly (deterministic
-        # probe-side salt, build-side replication; cold cells join
-        # plan-identically on salt 0).  Runs one sampling agg over the
-        # probe at plan time, the same CBO-substitute contract as the gate.
-        from .skew import salted_join
-
-        j = salted_join(gps_cells, tl_packed, ["_ck"], probe_key="seq")
+    j = gps_cells.join(tl_packed, "_ck", "inner")
 
     # J2 refine — LineSegment.intersectionDistance (LineSegment.java:17-43)
     rx, ry = F.col("lon") - F.col("p_lon"), F.col("lat") - F.col("p_lat")
@@ -380,7 +354,6 @@ def speed_samples(
     crossings: DataFrame,
     segments: DataFrame,
     jumpers: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """J3/J4: crossings → SAMPLE_SCHEMA speed samples, with NO
     O(network) data collected to the driver.
@@ -450,14 +423,11 @@ def speed_samples(
             yield pd.DataFrame(dict(zip(names, (out_trace, *out))))
 
     cross_samples = arranged.mapInPandas(run, schema=CROSS_SAMPLE_SCHEMA)
-    return _jumper_samples_declarative(cross_samples, segments, jumpers, cfg)
+    return _jumper_samples_declarative(cross_samples, segments, jumpers)
 
 
 def _jumper_samples_declarative(
-    cross_samples: DataFrame,
-    segments: DataFrame,
-    jumpers: DataFrame,
-    cfg: EngineConfig = DEFAULT_CONFIG,
+    cross_samples: DataFrame, segments: DataFrame, jumpers: DataFrame
 ) -> DataFrame:
     """J4 as DataFrame algebra (Jumper.getSpeedSamples, Jumper.java:46-57 +
     Vehicle.java:250-275): for consecutive emitted crossing samples A→B of
@@ -477,20 +447,9 @@ def _jumper_samples_declarative(
         F.col("start_node_id").alias("a_end"), F.col("end_node_id").alias("b_start"),
         "length_m", "segment_ids",
     )
-    # Size-gate the broadcast hint on the segment-dim joins: the kernel
-    # output has NO size statistics at plan time (mapInPandas), so without
-    # a hint Spark plans sort-merge and — even when AQE later converts to
-    # broadcast — the ~|samples| side's shuffle is already materialised;
-    # measured +28% on the 53M-row single-executor run (180 s vs 141 s,
-    # BENCH.md).  One count() on the dim (orders smaller than the fact
-    # side; parquet metadata-fast) decides: broadcast while it fits,
-    # sort-merge above — the O(network) planet dim stays driver-safe.
-    # This is a deliberate plan-time statistics job (CBO would do the
-    # same); memoised on the DataFrame so repeated pipeline builds over
-    # one network pay it once.  The jumper dim IS bounded (short-segment
-    # sliver) — broadcast it unconditionally.
-    if memo_rowcount(segments) <= cfg.broadcast_dim_max_rows:
-        seg_a, seg_b = F.broadcast(seg_a), F.broadcast(seg_b)
+    # The segment-dim joins are Spark's to size (the segment table's
+    # statistics against the session's broadcast threshold).  The jumper
+    # dim IS bounded (short-segment sliver) — broadcast it unconditionally.
     enriched = (
         cross_samples.join(seg_a, "prev_seg", "left")  # null on first sample
         .join(seg_b, "segment_id", "inner")  # segment exists by construction
@@ -666,12 +625,12 @@ def run_pipeline(
     if cfg.apply_anonymity_gate:
         fixes = anonymity_gate(fixes)
     pairs = pair_fixes(fixes, cfg)
-    crossings = find_crossings(pairs, triplines, cfg)
+    crossings = find_crossings(pairs, triplines)
     # NOTE: crossings already inherit the pairing window's hash(trace_id)
     # partitioning through the narrow join chain, so speed_samples could
     # skip its repartition — but that measured SLOWER (93s vs 68s at 8
     # cores / 53M rows): the explicit kernel exchange decouples the fat
     # explode+join stage from the Python stage and rebalances the per-trace
     # crossing skew across 4× finer tasks.  Keep the 3-exchange shape.
-    samples = speed_samples(spark, crossings, segments, jumpers, cfg)
+    samples = speed_samples(spark, crossings, segments, jumpers)
     return crossings, samples

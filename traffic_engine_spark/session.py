@@ -107,22 +107,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # the one broadcast threshold: the planner sizes every engine dim
+        # join against it from the dims' statistics
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    # Streaming state store backend (stateful medallion queries): the
-    # default HDFS-backed provider keeps every version of every key on
-    # the JVM heap per maintenance interval; RocksDB moves state off-heap
-    # with changelog checkpointing.  Env-switchable for A/B.
-    state_provider = os.environ.get("SPARK_GRAFT_STATESTORE", "")
-    if state_provider:
-        if state_provider in ("rocksdb", "RocksDB"):
-            state_provider = (
-                "org.apache.spark.sql.execution.streaming."
-                "state.RocksDBStateStoreProvider"
-            )
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", state_provider
-        )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():

@@ -15,11 +15,13 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONFIG, Z_AREA
+from ..config import Z_AREA
 from ..functions.cells import tile_x_col, tile_y_col
 
 
 DISPLAY_OFFSET_DEG = -0.000025  # two-way display offset (OSMDataStore.java:132)
+# segment tables above this row count are never assembled on the driver
+GEOJSON_DRIVER_MAX_ROWS = 4_000_000
 
 
 def segments_to_geojson(
@@ -27,10 +29,8 @@ def segments_to_geojson(
     path: str | None = None,
     offset_display: bool = False,
     simplify_zoom: int | None = None,
-    cfg=DEFAULT_CONFIG,
 ) -> str:
-    """Street segments → GeoJSON.  Size-gated like every other dim
-    decision in the engine: at or below ``cfg.broadcast_dim_max_rows``
+    """Street segments → GeoJSON.  At or below ``GEOJSON_DRIVER_MAX_ROWS``
     the FeatureCollection is assembled on the driver (returned, and
     written to `path` if given); above it the driver assembly would be
     an unbounded collect, so the call routes to the distributed per-tile
@@ -45,11 +45,13 @@ def segments_to_geojson(
     geometry to sub-pixel Douglas–Peucker tolerance at that display
     zoom before anything else runs (functions/simplify.py)."""
     from ..functions.geodesy import offset_curve_np
-    from ..util import over_rowcount
 
     # gate on the RAW table: simplification preserves row count, and
-    # counting after it would execute the thinning kernel twice
-    routed_distributed = over_rowcount(segments, cfg.broadcast_dim_max_rows)
+    # counting after it would execute the thinning kernel twice.
+    # limit(cap + 1) stops the scan early: the gate needs one bit, not the
+    # count
+    cap = GEOJSON_DRIVER_MAX_ROWS
+    routed_distributed = segments.limit(cap + 1).count() > cap
 
     if simplify_zoom is not None and not routed_distributed:
         # thin BEFORE collect/offset: sub-pixel tolerance makes the
@@ -65,7 +67,7 @@ def segments_to_geojson(
         if path is None:
             raise ValueError(
                 "segment table exceeds the driver-assembly gate "
-                f"({cfg.broadcast_dim_max_rows} rows); pass `path` for the "
+                f"({GEOJSON_DRIVER_MAX_ROWS} rows); pass `path` for the "
                 "distributed JSONL writer"
             )
         segments_to_geojson_files(

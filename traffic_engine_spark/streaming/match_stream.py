@@ -199,7 +199,7 @@ def stream_crossings(
     result is the append-mode crossing log to persist as the silver table
     (CROSSING_SCHEMA = find_crossings' output shape)."""
     pairs = pair_fixes_stream(fixes_stream, cfg)
-    return find_crossings(pairs, triplines, cfg)
+    return find_crossings(pairs, triplines)
 
 
 CROSSING_SCHEMA = (
