@@ -87,7 +87,7 @@ def main():
     TI.assign_tiles(images).write.mode("overwrite").parquet(f"{args.out}/tiles")
 
     if args.offmap:
-        M.offmap_traces(samples, segs, jumpers, M.decode_fixes(images, cfg)) \
+        M.offmap_traces(samples, segs, jumpers, M.decode_fixes(images)) \
             .write.mode("overwrite").parquet(f"{args.out}/offmap_traces")
 
     spark.stop()

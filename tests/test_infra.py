@@ -1809,74 +1809,6 @@ def test_snapshot_store_changes_cdc(spark, tmp_path):
     assert empty.count() == 0 and empty.columns == ["k", "n", "_change_type"]
 
 
-def test_hostload_tree_attribution():
-    """tools/hostload attributes our own CPU burn to our process tree —
-    the invariant the bench contamination guard rests on.  Pure-parse
-    test (no timing assertions against the noisy host): burning ~0.5 s
-    of CPU in this process must grow our tree's jiffies accordingly."""
-    import sys as _sys
-    import time as _time
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    _sys.path.insert(0, os.path.join(repo, "tools"))
-    from hostload import _tree_cpu_jiffies
-
-    clk = os.sysconf("SC_CLK_TCK")
-    j0 = _tree_cpu_jiffies(os.getpid())
-    t0 = _time.process_time()
-    x = 0.0
-    while _time.process_time() - t0 < 0.5:
-        for i in range(10000):
-            x += i * 0.5
-    grew = _tree_cpu_jiffies(os.getpid()) - j0
-    assert grew >= 0.3 * clk * 0.5, (grew, clk)  # ≥ 60% of the burn seen
-
-
-def test_hostload_attributes_cpu_of_dead_unreaped_descendants():
-    """The scaling-bench misattribution regression: a grandchild whose
-    parent exits WITHOUT wait()ing it (the py4j-JVM shape) must still
-    have its burn attributed to our tree, even though it has left the
-    process table before the closing snapshot.  The old point-in-time
-    walk + cutime rollup lost it entirely — every multi-executor phase
-    read a bit-stable external_frac ~= our own pinned cores / 32
-    (scaling_r5_attempts.jsonl)."""
-    import subprocess
-    import sys as _sys
-    import time as _time
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    _sys.path.insert(0, os.path.join(repo, "tools"))
-    from hostload import LoadMonitor
-
-    clk = os.sysconf("SC_CLK_TCK")
-    burn = (
-        "import time\n"
-        "t0 = time.process_time()\n"
-        "while time.process_time() - t0 < 0.8:\n"
-        "    pass\n"
-    )
-    # child: spawn the burner, linger while it burns, then _exit without
-    # reaping it -> the burner's jiffies never roll up into any cutime
-    child = (
-        "import os, subprocess, sys, time\n"
-        f"p = subprocess.Popen([sys.executable, '-c', {burn!r}])\n"
-        "time.sleep(2.5)\n"
-        "os._exit(0)\n"
-    )
-    mon = LoadMonitor(sample_interval=0.1)
-    try:
-        s0 = mon.snapshot()
-        subprocess.run([_sys.executable, "-c", child], check=True)
-        _time.sleep(0.3)
-        s1 = mon.snapshot()
-    finally:
-        mon.close()
-    grew = s1["tree"] - s0["tree"]
-    # >= 50% of the 0.8 s grandchild burn seen (sampler granularity +
-    # host noise headroom; the old code saw ~0%)
-    assert grew >= 0.5 * clk * 0.8, (grew, clk)
-
-
 def test_star_contraction_matches_label_propagation(spark):
     """Star contraction (Kiveris et al.) and min-label propagation must
     agree exactly on mixed graphs, and star must solve a 3000-hop chain
@@ -1929,20 +1861,6 @@ def test_dedup_resolution_falls_back_to_star_on_chains(spark):
     assert len(out) == 201
     assert (out["component_id"] == 0).all()
     assert out[out.keep]["doc_id"].tolist() == [0]
-
-
-def test_fault_probe_returns_positive_rate():
-    """hostload.fault_probe: first-touch throughput is a positive finite
-    GiB/s figure at any probe size (no timing threshold — the host's
-    throttle phases are exactly what it exists to measure)."""
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    _sys.path.insert(0, os.path.join(repo, "tools"))
-    from hostload import fault_probe
-
-    r = fault_probe(mb=32)
-    assert r > 0.0 and r < 1e6
 
 
 @pytest.mark.parametrize("seed", [101, 202])
@@ -2349,3 +2267,78 @@ def test_streaming_pixel_store_matches_batch_render(spark, tmp_path):
         op_id="pixel-counts-z15-0",
     )
     assert store.current_snapshot_id() == before
+
+
+def test_get_spark_reads_only_deployment_settings_from_env(tmp_path, monkeypatch):
+    """`get_spark` takes the cores and the shuffle dir from the
+    environment and nothing else: the Arrow batch, scan split and driver
+    memory are constants, so the benchmark measures the configuration
+    every caller gets.  The builder's options are captured from a patched
+    `getOrCreate`, so no second JVM starts."""
+    from pyspark.sql import SparkSession
+
+    from traffic_engine_spark.session import get_spark
+
+    class _Context:
+        def setLogLevel(self, level):
+            pass
+
+    class _Session:
+        sparkContext = _Context()
+
+    built = []
+
+    def capture(builder):
+        built.append(dict(builder._options))
+        return _Session()
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path))
+    get_spark(cores=2)
+    monkeypatch.setenv("SPARK_ARROW_BATCH", "7")
+    monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", "3k")
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "5m")
+    get_spark(cores=2)
+    assert built[0] == built[1]
+    assert built[0]["spark.sql.execution.arrow.maxRecordsPerBatch"] == "32768"
+    assert built[0]["spark.sql.files.maxPartitionBytes"] == "16m"
+    assert built[0]["spark.driver.memory"] == "16g"
+    assert built[0]["spark.local.dir"] == str(tmp_path)
+
+
+def _readme_layout_paths(repo):
+    """Repo-relative paths named in README.md's Layout block, read as an
+    indented tree: a line names a path when its first word ends in "/",
+    ".py" or ".sh" and sits at most one level (two spaces) below the
+    directory that encloses it."""
+    with open(os.path.join(repo, "README.md")) as fh:
+        block = fh.read().split("## Layout", 1)[1].split("```", 2)[1]
+    paths, dirs = [], []
+    for line in block.splitlines():
+        if not line.strip():
+            continue
+        word = line.split()[0]
+        depth = (len(line) - len(line.lstrip())) // 2
+        if depth > len(dirs) or not re.fullmatch(r"[\w.]+(/[\w.]+)*(/|\.py|\.sh)", word):
+            continue
+        del dirs[depth:]
+        paths.append("".join(dirs) + word)
+        if word.endswith("/"):
+            dirs.append(word)
+    return paths
+
+
+def test_readme_layout_matches_tree():
+    """Every module of the package appears in README's Layout block, and
+    every path the block names exists."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    named = _readme_layout_paths(repo)
+    assert "traffic_engine_spark/plans/match.py" in named
+    assert [p for p in named if not os.path.exists(os.path.join(repo, p))] == []
+    modules = {
+        os.path.relpath(os.path.join(d, f), repo)
+        for d, _, files in os.walk(os.path.join(repo, "traffic_engine_spark"))
+        for f in files
+        if f.endswith(".py") and f != "__init__.py"
+    }
+    assert sorted(modules - set(named)) == []

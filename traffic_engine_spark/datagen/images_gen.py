@@ -4,9 +4,8 @@ from simulated GPS fixes: each row is one fix carried as an image+caption.
 Schema: (image_id:string, bytes:binary, w:int32, h:int32, fmt:string,
 caption:string, phash:int64) — FIXTURES.md §1.
 
-Small scales run in-process (pandas); bench scales encode in parallel via
-Spark ``mapInPandas`` so generation itself follows the engine's Arrow-batch
-design.
+Encoding runs in-process (pandas); ``bench_data.ensure_bench_images`` runs
+it inside Spark ``mapInPandas`` at bench scale.
 """
 
 from __future__ import annotations
@@ -43,27 +42,3 @@ def images_from_fixes_pd(fixes: pd.DataFrame, lossy_every: int = 7) -> pd.DataFr
         out["phash"].append(phash64(px))
     df = pd.DataFrame(out)
     return df.astype({"w": np.int32, "h": np.int32, "phash": np.int64})
-
-
-def write_images_spark(spark, fixes: pd.DataFrame, path: str, partitions: int = 32):
-    """Parallel encode at bench scale: fixes → images parquet via mapInPandas."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-            T.StructField("caption", T.StringType(), False),
-            T.StructField("phash", T.LongType(), False),
-        ]
-    )
-
-    def encode_batches(batches):
-        for pdf in batches:
-            yield images_from_fixes_pd(pdf)
-
-    sdf = spark.createDataFrame(fixes).repartition(partitions)
-    sdf.mapInPandas(encode_batches, schema=schema).write.mode("overwrite").parquet(path)

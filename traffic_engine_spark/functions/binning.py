@@ -105,9 +105,5 @@ def speed_bin_col(speed_ms: Column) -> Column:
     return b.cast("int")
 
 
-def packed_bin_col(hour: Column, speed_bin: Column) -> Column:
-    return (hour * F.lit(HOURS_IN_WEEK) + speed_bin).cast("int")
-
-
 def bin_mean_col(speed_bin: Column) -> Column:
     return (speed_bin.cast("double") - F.lit(0.5)) / F.lit(3.6)

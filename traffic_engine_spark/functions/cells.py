@@ -143,10 +143,6 @@ def cell_pack_col(x: Column, y: Column, zoom: int) -> Column:
     )
 
 
-def cell_of_np(lat: np.ndarray, lon: np.ndarray, zoom: int = Z_ITEM) -> np.ndarray:
-    return cell_pack_np(tile_x_np(lon, zoom), tile_y_np(lat, zoom), zoom)
-
-
 def cell_of_col(lat: Column, lon: Column, zoom: int = Z_ITEM) -> Column:
     return cell_pack_col(tile_x_col(lon, zoom), tile_y_col(lat, zoom), zoom)
 

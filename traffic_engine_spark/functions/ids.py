@@ -32,19 +32,8 @@ def segment_key_py(way_id: int, start_node: int, end_node: int) -> str:
     return f"ss_{way_id}:{start_node}-{end_node}"
 
 
-def segment_key_col(way_id: Column, start_node: Column, end_node: Column) -> Column:
-    return F.concat(
-        F.lit("ss_"), way_id.cast("string"), F.lit(":"),
-        start_node.cast("string"), F.lit("-"), end_node.cast("string"),
-    )
-
-
 def segment_id_py(way_id: int, start_node: int, end_node: int) -> int:
     return det_id_py(segment_key_py(way_id, start_node, end_node))
-
-
-def segment_id_col(way_id: Column, start_node: Column, end_node: Column) -> Column:
-    return det_id_col(segment_key_col(way_id, start_node, end_node))
 
 
 def tripline_key_py(segment_id: int, index: int) -> str:
@@ -53,9 +42,3 @@ def tripline_key_py(segment_id: int, index: int) -> str:
 
 def tripline_id_py(segment_id: int, index: int) -> int:
     return det_id_py(tripline_key_py(segment_id, index))
-
-
-def tripline_id_col(segment_id: Column, index: Column) -> Column:
-    return det_id_col(
-        F.concat(F.lit("tl_"), segment_id.cast("string"), F.lit("-"), index.cast("string"))
-    )

@@ -1,5 +1,5 @@
 """Text-analysis column builders: normalisation, tokenisation, shingles,
-language-ID scoring, quality metrics, fingerprints.
+stopword and punctuation ratios, fingerprints.
 
 All pure Spark column expressions (JVM, codegen) — the 100 TB text path
 never leaves the JVM.  Every builder has a documented ANSI-SQL equivalent
@@ -60,22 +60,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """k-word shingles of the normalised text (array<string>).
-
-    SQL twin: list comprehension over the split array.  For hot paths
-    prefer `.withColumn("toks", ws_tokens(text))` + `shingles_from_tokens`
-    (see that function's perf note)."""
-    return shingles_from_tokens(ws_tokens(text), k)
-
-
-def char_shingles(text: Column, k: int = 5) -> Column:
-    t = normalize(text)
-    n = F.length(t)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.substring(t, i, k))
-
-
 def hash64(col: Column, salt: Column | str | None = None) -> Column:
     """Shared Spark↔DuckDB 60-bit hash: ('0x'||substr(md5(x),1,15))::BIGINT."""
     x = col if salt is None else F.concat(col, F.lit("_"), salt if isinstance(salt, Column) else F.lit(str(salt)))
@@ -84,11 +68,6 @@ def hash64(col: Column, salt: Column | str | None = None) -> Column:
 
 def stopword_count(tokens: Column, words: list[str]) -> Column:
     return F.size(F.filter(tokens, lambda t: t.isin(words)))
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    toks = ws_tokens(text)
-    return {lang: stopword_count(toks, words) for lang, words in LANG_PROFILES.items()}
 
 
 def punct_ratio(text: Column) -> Column:
@@ -110,16 +89,6 @@ def avg_token_len(text: Column) -> Column:
     return F.aggregate(
         toks, F.lit(0.0), lambda acc, t: acc + F.length(t).cast("double")
     ) / F.greatest(F.size(toks), F.lit(1)).cast("double")
-
-
-def quality_score(text: Column) -> Column:
-    """Composite quality heuristic in [0, 1]: length band + low punctuation
-    + plausible stopword density (the usual pretraining-filter shape)."""
-    nt = n_tokens_ws(text).cast("double")
-    len_ok = F.when((nt >= 5) & (nt <= 1000), F.lit(1.0)).otherwise(F.lit(0.0))
-    p = punct_ratio(text)
-    s = stopword_ratio(text)
-    return (len_ok + F.when(p < 0.2, 1.0).otherwise(0.0) + F.when(s > 0.01, 1.0).otherwise(0.0)) / F.lit(3.0)
 
 
 def fingerprint(text: Column) -> Column:

@@ -117,16 +117,6 @@ def minhash_signature_array(
     return sh.mapInPandas(kernel, schema=f"doc_id {id_type}, sig array<bigint>")
 
 
-def minhash_signatures(
-    docs: DataFrame, text_col: str = "text", n_hashes: int = 16, shingle_k: int = 3
-) -> DataFrame:
-    """(doc_id, j, h) row form of `minhash_signature_array` (back-compat
-    shape; identical values)."""
-    return minhash_signature_array(docs, text_col, n_hashes, shingle_k).select(
-        "doc_id", F.posexplode("sig").alias("j", "h")
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",

@@ -110,13 +110,12 @@ def knn_join_cells(
     k: int = 3,
     point_id: str = "point_id",
     station_id: str = "station_id",
-    exact: bool = True,
     max_ring: int = 64,
 ) -> DataFrame:
     """Scale path for kNN: candidates via cell-ring equi-join, exact refine
-    + rank — and, with ``exact=True`` (default), guaranteed-radius
-    escalation so the result is EXACT at any point/station density, not
-    just when the initial ring happens to cover the k-th neighbour:
+    + rank, and guaranteed-radius escalation so the result is EXACT at any
+    point/station density, not just when the initial ring happens to cover
+    the k-th neighbour:
 
     1. Ring join at ``ring`` with the grid_disk explode on the *station*
        side (the small side carries the (2r+1)^2 replication).
@@ -128,12 +127,11 @@ def knn_join_cells(
     3. The residual (typically a sliver: sparse neighbourhoods, points near
        their k-th neighbour's ring edge) re-runs with ring*4, now exploding
        the *point* side — the residual is the small side.  Above
-       ``max_ring`` the residual falls back to a broadcast-points brute
-       refine against the full station set.
+       ``max_ring`` the residual falls back to a brute refine against the
+       full station set (Spark broadcasts the residual when it fits).
 
-    ``exact=True`` is EAGER: the escalation loop runs Spark jobs
-    (localCheckpoint + isEmpty per round) at call time.  ``exact=False``
-    restores the lazy single-pass ring join (caller asserts coverage).
+    The call is EAGER: the escalation loop runs Spark jobs
+    (localCheckpoint + isEmpty per round) at call time.
 
     r6: like `knn_join_broadcast`, both sides collapse to DISTINCT
     positions before any candidate generation (stations pruned to the k
@@ -167,9 +165,9 @@ def knn_join_cells(
                 ]
             )
         # escalated rings: a literal array would hold (2r+1)^2 struct
-        # literals (16k expression nodes at r=64 — the giant-unrolled-
-        # expression codegen fallback documented in BENCH.md); generate
-        # the disk with sequence/transform instead
+        # literals (16k expression nodes at r=64, past the size at which
+        # Spark falls back from generated code); generate the disk with
+        # sequence/transform instead
         return F.expr(
             f"flatten(transform(sequence({-r}, {r}), "
             f"dx -> transform(sequence({-r}, {r}), "
@@ -238,9 +236,6 @@ def knn_join_cells(
         return fan.join(res.withColumnRenamed(point_id, "_rep"), "_rep").select(
             point_id, "rank", station_id, "dist2"
         )
-
-    if not exact:
-        return _fan_out(_topk(points, ring, explode_points=False).select(*out_cols))
 
     remaining = points.select(point_id, "lat", "lon")
     out: DataFrame | None = None

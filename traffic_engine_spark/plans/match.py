@@ -51,7 +51,7 @@ from ..functions.cells import explode_bbox_cover, pack_xy, tile_x_col, tile_y_co
 CAPTION_RE = r"trace=(-?\d+);ts=(-?\d+);lat=(-?[0-9.]+);lon=(-?[0-9.]+)"
 
 
-def decode_fixes(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
+def decode_fixes(images: DataFrame) -> DataFrame:
     """images → (image_id, trace_id, ts, lat, lon); JVM-side regexp, no UDF.
 
     sec→ms coercion per GPSPoint.java:28-29 happens here; tz offsetting
@@ -618,7 +618,7 @@ def run_pipeline(
 
     Pass ``tz_polygons_pd`` + ``tz_offsets_ms`` to enable C13 localtime
     conversion (per-z11-area offsets); omitted = UTC input (offset 0)."""
-    fixes = decode_fixes(images, cfg)
+    fixes = decode_fixes(images)
     if tz_polygons_pd is not None and cfg.convert_to_localtime:
         dim = area_zone_offsets(fixes, tz_polygons_pd, tz_offsets_ms or {})
         fixes = apply_zone_offsets(fixes, dim, cfg)

@@ -88,23 +88,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch sizing: 32k rows balances per-batch Python overhead
-        # against memory; with multi-MB image payloads set
-        # SPARK_ARROW_BATCH smaller (SURVEY §4 physical notes)
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_ARROW_BATCH", "32768"),
-        )
+        # against memory (SURVEY §4 physical notes)
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
         # Scan split size: the bench inputs are single ~5-125 MB parquet
         # files, which the 128 MB default plans as 1-2 splits — scans then
         # run on 1-2 of the 32 cores (measured: tpch_q1 0.55 s → 0.31 s at
-        # 16m).  Env-parameterised: a production cluster reading TB-scale
-        # tables should set 128m-1g (guide §6) — more splits there only
+        # 16m).  A production cluster reading TB-scale tables should pass
+        # 128m-1g through extra_conf (guide §6) — more splits there only
         # adds scheduling overhead and map-task count (§2.2).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.sql.files.maxPartitionBytes", "16m")
+        .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # the one broadcast threshold: the planner sizes every engine dim
