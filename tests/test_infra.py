@@ -318,8 +318,6 @@ def test_streaming_offmap_matches_batch(spark, spark_network, images_pd):
     """S9 on the stream (medallion wiring): off-map traces derived from the
     multi-microbatch streamed samples must equal the batch plan's rows
     exactly — ids, windows, and polyline coords."""
-    from traffic_engine_spark.streaming.match_stream import offmap_traces_from_stream
-
     segs, tls, jumpers = spark_network
     fixes = M.decode_fixes(spark.createDataFrame(images_pd))
 
@@ -329,7 +327,9 @@ def test_streaming_offmap_matches_batch(spark, spark_network, images_pd):
     want = M.offmap_traces(
         spark.createDataFrame(batch_samples), segs, jumpers, fixes
     ).toPandas()
-    got = offmap_traces_from_stream(spark, streamed, segs, jumpers, fixes).toPandas()
+    got = M.offmap_traces(
+        spark.createDataFrame(streamed, M.SAMPLE_SCHEMA), segs, jumpers, fixes
+    ).toPandas()
     assert len(want) > 0
     for df in (want, got):
         df["lons"] = df["lons"].apply(tuple)
@@ -1347,10 +1347,11 @@ def test_simhash_pairs_pigeonhole_complete(spark):
 
 
 def test_jumpers_sharded_matches_global(spark_network, oracle_net):
-    """build_network_tables' component-sharded J5 fold (zero driver folds)
-    must reproduce the reference's one global fold (pyoracle) exactly —
-    merges only occur within node-connected chains, so sharding by
-    connected component preserves reference semantics bit-for-bit."""
+    """build_network_tables' J5 fold — one union-find task, one fold per
+    connected component, zero driver folds — must reproduce the reference's
+    one global fold (pyoracle) exactly: merges only occur within
+    node-connected chains, so folding per component preserves reference
+    semantics bit-for-bit."""
     _, _, jumpers = spark_network
     key = ["start_node_id", "end_node_id"]
     want = pd.DataFrame(
@@ -1367,8 +1368,8 @@ def test_jumpers_sharded_matches_global(spark_network, oracle_net):
 
 
 def test_jumpers_independent_of_shuffle_partitions(spark, spark_network):
-    """The jumper table is the same whether the component shuffle runs in
-    one partition or eight."""
+    """The jumper table is the same whether the shuffle into the fold task
+    runs in one partition or eight."""
     segs, _, _ = spark_network
     old = spark.conf.get("spark.sql.shuffle.partitions")
     got = []
@@ -1382,6 +1383,76 @@ def test_jumpers_independent_of_shuffle_partitions(spark, spark_network):
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert len(got[0]) > 5
     pd.testing.assert_frame_equal(got[0], got[1], check_exact=True)
+
+
+def _random_short_segments(rng) -> pd.DataFrame:
+    """Short-segment rows of five disjoint components — a chain, a ring, a
+    branching star and two of random shape — with random directions,
+    reversed twins and node ids, whose rows interleave in (way_id,
+    seq_in_way, twin) order and arrive shuffled."""
+    edges, n = [], 0
+    for shape in ["chain", "ring", "star", *rng.choice(["chain", "ring", "star"], 2)]:
+        nodes = list(range(n, n + int(rng.integers(3, 8))))
+        n += len(nodes)
+        if shape == "chain":
+            comp = list(zip(nodes[:-1], nodes[1:]))
+        elif shape == "ring":
+            comp = list(zip(nodes, nodes[1:] + nodes[:1]))
+        else:  # the spokes of a star around nodes[0]
+            comp = [(nodes[0], b) for b in nodes[1:]]
+        edges += [(a, b) if rng.random() < 0.7 else (b, a) for a, b in comp]
+    node_ids = rng.permutation(10_000)[:n] + 1  # random ids, random id order
+    slots = rng.permutation(len(edges))  # (way_id, seq_in_way) per edge
+    rows = []
+    for (a, b), slot in zip(edges, slots):
+        a, b = int(node_ids[a]), int(node_ids[b])
+        way, seq = int(slot // 3) + 1, int(slot % 3)
+        rows.append((a, b, way, seq, 0))
+        if rng.random() < 0.4:  # the reversed twin of a two-way street
+            rows.append((b, a, way, seq, 1))
+    pdf = pd.DataFrame(rows, columns=["start_node_id", "end_node_id", "way_id", "seq_in_way", "twin"])
+    pdf["segment_id"] = rng.permutation(10_000)[: len(pdf)] + 1
+    pdf["length_m"] = rng.uniform(1.0, 60.0, len(pdf))
+    return pdf.sample(frac=1, random_state=int(rng.integers(1 << 30)))
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_fold_jumpers_equals_one_global_fold(seed):
+    """fold_jumpers (union-find components, one fold each) equals pyoracle's
+    semantics — one global add_jumper fold over all short segments in
+    (way_id, seq_in_way, twin) order — on random chains, rings, stars and
+    reversed twins, whatever order the rows arrive in."""
+    from traffic_engine_spark.oracle import pyoracle as O
+
+    pdf = _random_short_segments(np.random.default_rng(seed))
+    jumpers, s_idx, e_idx = {}, set(), set()
+    for s in pdf.sort_values(["way_id", "seq_in_way", "twin"]).itertuples():
+        O.add_jumper(jumpers, s_idx, e_idx, O.Jumper(
+            int(s.start_node_id), int(s.end_node_id), float(s.length_m), [int(s.segment_id)]
+        ))
+    key = ["start_node_id", "end_node_id"]
+    want = pd.DataFrame(
+        [(k[0], k[1], j.length, tuple(j.segments)) for k, j in jumpers.items()],
+        columns=[*key, "length_m", "segment_ids"],
+    ).sort_values(key).reset_index(drop=True)
+    got = N.fold_jumpers(pdf)
+    got["segment_ids"] = got["segment_ids"].apply(tuple)
+    got = got.sort_values(key).reset_index(drop=True)
+    assert (want["segment_ids"].map(len) >= 3).any()  # the graph merges
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+def test_jumpers_empty_without_short_segments(spark, spark_network, images_pd):
+    """No short segments ⇒ no jumpers, and run_pipeline → histograms still
+    runs, with no jumper samples."""
+    from traffic_engine_spark.config import MIN_SEGMENT_LEN
+
+    segs, tls, _ = spark_network
+    jumpers = N.build_jumpers(segs.filter(F.col("length_m") > MIN_SEGMENT_LEN))
+    assert jumpers.count() == 0
+    _, samples = M.run_pipeline(spark, spark.createDataFrame(images_pd), tls, segs, jumpers)
+    assert samples.filter(F.col("source") == "jumper").count() == 0
+    assert S.histograms(samples).count() > 0
 
 
 def test_snapshot_store_merge_and_time_travel(spark, tmp_path, spark_network):

@@ -168,16 +168,14 @@ def test_j1_skew_join_bounds_hot_cell_task_rows(spark):
 
 
 def test_rebuilding_queries_launches_no_jobs(spark, city, images_pd, tmp_path):
-    """Building a DataFrame launches no Spark jobs: the first build of
-    run_pipeline, stream_crossings and viterbi_match over a freshly
-    cached network runs nothing, with no warm-up."""
+    """Building a DataFrame launches no Spark jobs: the first build of the
+    network tables, and of run_pipeline, stream_crossings and
+    viterbi_match over them, runs nothing, with no warm-up."""
     from traffic_engine_spark.plans import network as N
     from traffic_engine_spark.streaming.match_stream import FIX_SCHEMA, stream_crossings
 
     nodes, ways, _ = city
-    segs, tls, jumpers = N.build_network_tables(
-        spark, spark.createDataFrame(ways), spark.createDataFrame(nodes)
-    )
+    ways, nodes = spark.createDataFrame(ways), spark.createDataFrame(nodes)
     images = spark.createDataFrame(images_pd)
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -185,8 +183,9 @@ def test_rebuilding_queries_launches_no_jobs(spark, city, images_pd, tmp_path):
 
     sc = spark.sparkContext
     group = "first-build-launches-no-jobs"
-    sc.setJobGroup(group, "first build of run_pipeline, stream_crossings, viterbi_match")
+    sc.setJobGroup(group, "first build of the network tables and the queries over them")
     try:
+        segs, tls, jumpers = N.build_network_tables(spark, ways, nodes)
         M.run_pipeline(spark, images, tls, segs, jumpers)
         stream_crossings(stream, tls)
         hmm.viterbi_match(M.decode_fixes(images), segs)

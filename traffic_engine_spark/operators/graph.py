@@ -9,13 +9,12 @@ Each iteration is one bounded-key equi-join + one partial-agg groupBy that
 also carries each node's previous label, so the convergence test reads the
 checkpointed aggregate instead of joining it again; the iteration count is
 the component hop-diameter — small for dedup clusters (near-dup graphs are
-dense blobs, not paths) and for jumper chains (metres long).  For adversarial
-long-chain graphs `connected_components_star` implements star-contraction
-(Kiveris et al., "Connected Components in MapReduce", SoCC'14): rounds
-scale with log² of the diameter, and `dedup_resolution` falls back to it
-automatically when label propagation's budget is exceeded.
+dense blobs, not paths).  For adversarial long-chain graphs
+`connected_components_star` implements star-contraction (Kiveris et al.,
+"Connected Components in MapReduce", SoCC'14): rounds scale with log² of
+the diameter, and `dedup_resolution` falls back to it automatically when
+label propagation's budget is exceeded.
 
-plans/network.build_jumpers labels its short-segment components here too.
 Each algorithm loudly raises if its own budget is exceeded instead of
 silently splitting a component.
 """

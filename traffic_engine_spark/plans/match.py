@@ -515,7 +515,13 @@ def offmap_traces(
     Plan shape (all declarative, scales like the pipeline itself): window
     lag over the samples → two equi-joins against the segment dim for the
     endpoint nodes → broadcast anti-join against jumpers → per-trace range
-    join back to fixes → sort_array(collect_list) for the polyline."""
+    join back to fixes → sort_array(collect_list) for the polyline.
+
+    On the stream it stays this batch view over the silver sample table: a
+    gap needs both bounding crossings plus every fix between them, so an
+    append-only operator could close it only by buffering every trace's
+    fixes in state (the reference, too, stores OffMapTrace and serves it by
+    query).  Batch == stream: test_streaming_offmap_matches_batch."""
     cr = samples.filter(F.col("source") == "crossing")
     w = Window.partitionBy("trace_id").orderBy("time", "end_time", "segment_id")
     trans = (

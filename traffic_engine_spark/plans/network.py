@@ -11,8 +11,8 @@ Shape of the job (scale notes inline):
   4. jumpers: the transitive merge (J5) of short segments (<= MIN_SEGMENT_LEN)
      is order-dependent by reference semantics (JumperDataStore.java:59-111),
      so it folds in the deterministic (way_id, seq_in_way, twin) order —
-     once per connected component of the short-segment node graph, inside
-     applyInPandas.  Nothing is collected to the driver.
+     once per union-find component of the short-segment node graph, in one
+     applyInPandas task.  Nothing runs at build time or reaches the driver.
 
 All three tables come back as cached DataFrames.
 
@@ -42,7 +42,6 @@ from ..functions.geodesy import (
     vincenty_inverse,
 )
 from ..functions.ids import segment_id_py, tripline_id_py
-from ..operators.graph import connected_components
 from ..oracle.pyoracle import Jumper, add_jumper, is_oneway, street_type_of
 
 SEGMENT_SCHEMA = T.StructType(
@@ -227,58 +226,59 @@ JUMPER_SCHEMA = T.StructType(
 )
 
 
-def build_jumpers(segments: DataFrame) -> DataFrame:
-    """J5: short segments → jumpers (JUMPER_SCHEMA), the fold sharded by
-    connected component.
+def fold_jumpers(short: pd.DataFrame) -> pd.DataFrame:
+    """J5 over short segments (JUMPER_SCHEMA rows out): union-find over
+    (start_node_id, end_node_id) labels the components of the short-segment
+    node graph, then the add_jumper fold runs once per component in the
+    deterministic (way_id, seq_in_way, twin) order.
 
     add_jumper merges only jumpers sharing an endpoint node
-    (JumperDataStore.java:59-111), so the merge closure of any jumper is its
-    connected component in the short-segment node graph — components never
-    interact, and folding each component separately in the deterministic
-    (way_id, seq_in_way, twin) order yields exactly the reference's one
-    global fold (test_jumpers_sharded_matches_global checks it against
-    pyoracle's).  A fold's cost also stays bounded by its component's size:
-    add_jumper scans the whole start index on every call.
+    (JumperDataStore.java:59-111), so components never interact: folding
+    each apart yields exactly the reference's one global fold, and keeps
+    add_jumper's whole-index scan bounded by the component's size."""
+    short = short.sort_values(["way_id", "seq_in_way", "twin"])
+    parent: dict = {}
 
-    Components are computed by min-label propagation (a few tiny
-    equi-joins; chains are metres-scale so the diameter — and iteration
-    count — is small), then each component folds inside applyInPandas."""
-    short = segments.filter(F.col("length_m") <= MIN_SEGMENT_LEN).select(
-        "segment_id", "way_id", "start_node_id", "end_node_id", "length_m",
-        "seq_in_way", "twin",
-    )
-    # min node id per component; raises rather than split a component
-    labels = connected_components(
-        short.select(
-            F.col("start_node_id").alias("a"), F.col("end_node_id").alias("b")
-        ),
-        src="a", dst="b", max_iter=64,
-    )
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
 
-    comp = short.join(
-        labels.select(
-            F.col("node").alias("start_node_id"), F.col("component")
-        ),
-        "start_node_id",
-    )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["way_id", "seq_in_way", "twin"])
-        jumpers: dict = {}
-        s_idx: set = set()
-        e_idx: set = set()
-        for s in pdf.itertuples():
+    for a, b in zip(short["start_node_id"], short["end_node_id"]):
+        parent[find(a)] = find(b)
+    rows = []
+    # groupby keeps each component's rows in the sorted order
+    for _, comp in short.groupby([find(a) for a in short["start_node_id"]], sort=False):
+        jumpers, s_idx, e_idx = {}, set(), set()
+        for s in comp.itertuples():
             add_jumper(
                 jumpers, s_idx, e_idx,
                 Jumper(int(s.start_node_id), int(s.end_node_id), float(s.length_m),
                        [int(s.segment_id)]),
             )
-        return pd.DataFrame(
-            [(k[0], k[1], j.length, j.segments) for k, j in jumpers.items()],
-            columns=["start_node_id", "end_node_id", "length_m", "segment_ids"],
-        )
+        rows += [(k[0], k[1], j.length, j.segments) for k, j in jumpers.items()]
+    return pd.DataFrame(rows, columns=[f.name for f in JUMPER_SCHEMA.fields])
 
-    return comp.groupBy("component").applyInPandas(fold, schema=JUMPER_SCHEMA)
+
+def build_jumpers(segments: DataFrame) -> DataFrame:
+    """J5: short segments (<= MIN_SEGMENT_LEN) → jumpers, one lazy plan.
+    Every short segment goes to ONE applyInPandas group, and fold_jumpers
+    labels and folds the components inside that task.
+
+    One task, not a per-tile phase plus a cross-tile merge: the engine
+    already holds the whole jumper table on every executor (J4 and
+    offmap_traces broadcast it unconditionally), and this task's input —
+    seven narrow columns per short segment — is the same order of size,
+    so it adds no size bound the engine does not already have."""
+    short = segments.filter(F.col("length_m") <= MIN_SEGMENT_LEN).select(
+        "segment_id", "way_id", "start_node_id", "end_node_id", "length_m",
+        "seq_in_way", "twin",
+    )
+    # a bare integer literal would be read as a GROUP BY ordinal
+    return short.groupBy(F.lit("all").alias("_all")).applyInPandas(
+        fold_jumpers, schema=JUMPER_SCHEMA
+    )
 
 
 def build_network_tables(

@@ -63,10 +63,8 @@ from ..config import (
 )
 from ..plans.match import (
     CROSS_SAMPLE_SCHEMA,
-    SAMPLE_SCHEMA,
     _jumper_samples_declarative,
     find_crossings,
-    offmap_traces,
     pair_crossings,
 )
 
@@ -389,23 +387,6 @@ def sessionize_stream(
         )
         .select(key, "n_events", "first_ts", "last_ts")
     )
-
-
-def offmap_traces_from_stream(
-    spark, streamed_samples_pd: pd.DataFrame, segments, jumpers: DataFrame, fixes
-):
-    """S9 on the streaming flow — the medallion wiring: the kernel streams
-    append-mode samples into a silver table; off-map traces are the
-    downstream declarative view over it (plans/match.offmap_traces is pure
-    DataFrame algebra over any samples relation).  A gap row needs BOTH
-    bounding crossings plus every fix between them, so an append-only
-    streaming operator cannot close it incrementally without re-buffering
-    all trace fixes in state — the reference itself materialises OffMapTrace
-    into a store and serves it by query (OSMDataStore.java:116,156-158),
-    which is exactly this bronze→silver shape.  Batch==stream parity:
-    tests/test_infra.py::test_streaming_offmap_matches_batch."""
-    samples = spark.createDataFrame(streamed_samples_pd, schema=SAMPLE_SCHEMA)
-    return offmap_traces(samples, segments, jumpers, fixes)
 
 
 # ---------------------------------------------------------------------------
