@@ -2,7 +2,9 @@
 oracles derived from the cited reference code."""
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from traffic_engine_spark.functions import binning, cells, geodesy, ids, images
 from traffic_engine_spark.oracle.pyoracle import intersection_distance
@@ -99,6 +101,31 @@ def test_speed_bins():
 def test_haversine_distance():
     d = geodesy.haversine_m(-122.0, 37.0, -122.0, 37.001)
     assert 110.0 < d < 112.5
+
+
+def test_haversine_column_matches_numpy(spark):
+    """The Spark column form equals numpy haversine_m, identical and
+    near-antipodal pairs included."""
+    rng = np.random.default_rng(5)
+    n = 1000
+    lon1, lat1 = rng.uniform(-180, 180, n), rng.uniform(-89, 89, n)
+    lon2, lat2 = rng.uniform(-180, 180, n), rng.uniform(-89, 89, n)
+    lon2[:50], lat2[:50] = lon1[:50], lat1[:50]
+    jitter = rng.uniform(-0.01, 0.01, (2, 50))
+    lon2[50:100] = np.where(lon1[50:100] > 0, lon1[50:100] - 180, lon1[50:100] + 180) + jitter[0]
+    lat2[50:100] = -lat1[50:100] + jitter[1]
+    pdf = pd.DataFrame({"i": np.arange(n), "lon1": lon1, "lat1": lat1, "lon2": lon2, "lat2": lat2})
+    cols = [F.col(c) for c in ("lon1", "lat1", "lon2", "lat2")]
+    got = (
+        spark.createDataFrame(pdf)
+        .select("i", geodesy.haversine_m_col(*cols).alias("d"))
+        .toPandas()
+        .sort_values("i")["d"]
+        .to_numpy()
+    )
+    want = geodesy.haversine_m(lon1, lat1, lon2, lat2)
+    assert (want[:50] == 0).all() and (want[50:100] > 19_900_000).all()
+    np.testing.assert_allclose(got, want, rtol=1e-9, atol=0)
 
 
 def test_vincenty_published_line():

@@ -1622,6 +1622,23 @@ def test_asof_join_operator(spark):
     out = relational.asof_join(left, right, on="k").toPandas().sort_values("lid")
     assert list(out["rv_asof"]) == [100, 200, None] or list(out["rv_asof"].fillna(-1)) == [100, 200, -1]
 
+    # 50 right rows tie on (k, ts): the carried value is the last in
+    # right_cols order, whatever the partitioning
+    rv = np.random.default_rng(7).permutation(50)
+    tied = spark.createDataFrame(pd.DataFrame({"k": 1, "ts": 5, "rv": rv}))
+    probe = spark.createDataFrame(pd.DataFrame({"k": [1], "ts": [10]}))
+    carried = {
+        relational.asof_join(probe, tied.repartition(n), on="k").first()["rv_asof"]
+        for n in (1, 3, 7, 13, 29)
+    }
+    assert carried == {49}
+
+    # a left column named like a right column survives next to its _asof twin
+    ev_left = spark.createDataFrame(pd.DataFrame({"k": [1], "ts": [10], "event_id": [7]}))
+    ev_right = spark.createDataFrame(pd.DataFrame({"k": [1], "ts": [5], "event_id": [3]}))
+    row = relational.asof_join(ev_left, ev_right, on="k").first()
+    assert (row["event_id"], row["event_id_asof"]) == (7, 3)
+
 
 def test_lsh_auto_bands_degenerate_threshold():
     """ADVICE r4: min_cosine == -1.0 makes the hyperplane collision

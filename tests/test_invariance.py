@@ -36,6 +36,8 @@ ENTRIES = [
     "topk_per_group",
     "anonymity_gate",
     "sessionize",
+    # as-of ties: right rows sharing (user, ts) carry the largest event_id
+    "asof_join",
     "dedup_minhash_lsh",
     "dedup_embedding_lsh",
     "dedup_components",

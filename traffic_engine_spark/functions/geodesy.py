@@ -14,15 +14,19 @@ geotools implements), verified against the paper's published test line in
 tests/test_functions.py; callers call `vincenty_inverse` and
 `vincenty_direct` directly.  `haversine_m` (the WGS84 mean-radius sphere)
 serves the synthetic-trace generator and the trajectory helpers, which
-need no geotools parity.  The pytest oracle imports *these same
-functions*, so engine↔oracle parity is exact by construction.  Everything
-is numpy-vectorised; used from datagen, the oracle, and inside Arrow-batched
+need no geotools parity; `haversine_m_col` is the same formula as a Spark
+column expression, for the JVM-side trajectory operators and the query
+registry.  The pytest oracle imports *these same functions*, so
+engine↔oracle parity is exact by construction.  Everything else is
+numpy-vectorised; used from datagen, the oracle, and inside Arrow-batched
 pandas UDFs (never per-row Python).
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from ..config import BEARING_EPSILON_DEG, EARTH_RADIUS_M
 
@@ -161,6 +165,23 @@ def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
     dlmb = np.radians(lon2 - lon1)
     a = np.sin(dphi / 2.0) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dlmb / 2.0) ** 2
     return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
+
+
+def haversine_m_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
+    """`haversine_m` as a Spark column expression (pure JVM, codegen).  The
+    registry's DuckDB oracles spell out this exact formula, so keep the
+    operation order when editing either side."""
+    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(
+        F.sqrt(
+            F.least(
+                F.lit(1.0),
+                F.pow(F.sin(F.radians(lat2 - lat1) / 2), 2)
+                + F.cos(F.radians(lat1))
+                * F.cos(F.radians(lat2))
+                * F.pow(F.sin(F.radians(lon2 - lon1) / 2), 2),
+            )
+        )
+    )
 
 
 def clamp_azimuth(d):

@@ -24,7 +24,14 @@ def asof_join(
     right_ts ≤ left_ts — the union-tag-window formulation: one shuffle on
     the key, no range cross product (the classic scalable as-of plan;
     generalises the reference's pending-crossing pairing J3 to arbitrary
-    streams)."""
+    streams).
+
+    Right rows that share a key and a timestamp tie; the tie resolves to
+    the last of them in ``right_cols`` order (the window orders by
+    (ts, side, *right_cols)), so the answer does not depend on how the
+    input is partitioned.  Each right column comes back as
+    ``<name><suffix>``; a left column that shares a right column's name
+    is kept."""
     right_cols = right_cols or [c for c in right.columns if c not in (on, right_ts)]
     l_tag = left.withColumn("_side", F.lit(1)).withColumn("_ats", F.col(left_ts))
     r_tag = (
@@ -34,7 +41,7 @@ def asof_join(
     merged = l_tag.unionByName(r_tag, allowMissingColumns=True)
     w = (
         Window.partitionBy(on)
-        .orderBy("_ats", "_side")
+        .orderBy("_ats", "_side", *right_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     carried = merged.select(
@@ -46,7 +53,8 @@ def asof_join(
             for c in right_cols
         ],
     )
-    return carried.filter(F.col("_side") == 1).drop("_side", "_ats", *right_cols)
+    right_only = [c for c in right_cols if c not in left.columns]
+    return carried.filter(F.col("_side") == 1).drop("_side", "_ats", *right_only)
 
 
 def _range_long(df: DataFrame, col: str):

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.cells import cell_of_col
+from ..functions.geodesy import haversine_m_col
 from ..functions.trajectory import discrete_frechet_m
 
 
@@ -233,8 +234,8 @@ def detect_stops(
     itself is the product: depot dwell, signal wait, congestion stand).
 
     Semantics (mirrored literally by the DuckDB oracle):
-      * link speed = haversine_m(prev, cur) / (dt/1000) with the sphere
-        radius of functions/geodesy (6371008.8 m); a link with dt <= 0
+      * link speed = functions/geodesy.haversine_m_col(prev, cur) /
+        (dt/1000), on the 6371008.8 m sphere; a link with dt <= 0
         (duplicate or regressing timestamp) has UNDEFINED speed and never
         extends a stop;
       * a stop's rows are the link ENDPOINTS; its start is the anchor
@@ -258,20 +259,7 @@ def detect_stops(
     )
     lat, lon, ts = F.col(lat_col), F.col(lon_col), F.col(ts_col)
     p_lat, p_lon, p_ts = F.col("_p_lat"), F.col("_p_lon"), F.col("_p_ts")
-    dist_m = (
-        F.lit(2.0 * 6371008.8)
-        * F.asin(
-            F.sqrt(
-                F.least(
-                    F.lit(1.0),
-                    F.pow(F.sin(F.radians(lat - p_lat) / 2), 2)
-                    + F.cos(F.radians(p_lat))
-                    * F.cos(F.radians(lat))
-                    * F.pow(F.sin(F.radians(lon - p_lon) / 2), 2),
-                )
-            )
-        )
-    )
+    dist_m = haversine_m_col(p_lon, p_lat, lon, lat)
     dt_ms = ts - p_ts
     slow = (
         p_ts.isNotNull()
@@ -477,19 +465,6 @@ def trace_features(
     lat, lon, ts = F.col(lat_col), F.col(lon_col), F.col(ts_col)
     udeg = lambda c: F.floor(c * 1e6 + F.lit(0.5)).cast("long")  # noqa: E731
 
-    def hav_m(lat1, lon1, lat2, lon2):
-        return F.lit(2.0 * 6371008.8) * F.asin(
-            F.sqrt(
-                F.least(
-                    F.lit(1.0),
-                    F.pow(F.sin(F.radians(lat2 - lat1) / 2), 2)
-                    + F.cos(F.radians(lat1))
-                    * F.cos(F.radians(lat2))
-                    * F.pow(F.sin(F.radians(lon2 - lon1) / 2), 2),
-                )
-            )
-        )
-
     # cell-visit stats via windows over the SAME trace partitioning —
     # Window's ClusteredDistribution(trace, cell) is subset-satisfied by
     # hash(trace), so they add one in-partition sort and NO exchange.  (A
@@ -509,10 +484,10 @@ def trace_features(
     )
     link_mm = F.when(
         F.col("_p_lat").isNotNull(),
-        F.floor(hav_m(F.col("_p_lat"), F.col("_p_lon"), lat, lon) * 1000.0 + F.lit(0.5)).cast("long"),
+        F.floor(haversine_m_col(F.col("_p_lon"), F.col("_p_lat"), lon, lat) * 1000.0 + F.lit(0.5)).cast("long"),
     ).otherwise(F.lit(0).cast("long"))
     dev2_mm = F.floor(
-        F.pow(hav_m(F.col("_c_lat"), F.col("_c_lon"), lat, lon), 2) * 1000.0 + F.lit(0.5)
+        F.pow(haversine_m_col(F.col("_c_lon"), F.col("_c_lat"), lon, lat), 2) * 1000.0 + F.lit(0.5)
     ).cast("long")
     clogc = F.when(
         F.col("_first_in_cell"),

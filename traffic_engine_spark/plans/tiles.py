@@ -201,7 +201,6 @@ def raster_pyramid(
     base_zoom: int,
     min_zoom: int,
     resolution: int = 256,
-    persist_levels: bool = True,
 ) -> DataFrame:
     """Raster overview pyramid (the gdaladdo / map-server overview build):
     from rendered tiles at ``base_zoom`` (render_tiles schema), produce
@@ -223,10 +222,10 @@ def raster_pyramid(
     ``n_points``/``max_count`` aggregate from the children (sum / max);
     ``n_pixels`` is recomputed from the composed parent grid.
 
-    Each intermediate level is persisted (``persist_levels``, default on):
-    level z−k is the INPUT of level z−k−1, and without pinning it the lazy
-    union would re-execute the whole upstream chain — including the leaf
-    render over the raw points — once per level.  The pinned relations are
+    Each intermediate level is persisted: level z−k is the INPUT of level
+    z−k−1, and without pinning it the lazy union would re-execute the whole
+    upstream chain — including the leaf render over the raw points — once
+    per level.  The pinned relations are
     small by construction (≤ |tiles|/4^k fixed-size rows).
     """
     assert min_zoom < base_zoom, (min_zoom, base_zoom)
@@ -262,7 +261,7 @@ def raster_pyramid(
         cur = cur.groupBy(
             F.shiftright("tile_x", 1), F.shiftright("tile_y", 1)
         ).applyInPandas(_compose(zc), RENDER_SCHEMA)
-        if persist_levels and zc > min_zoom:
+        if zc > min_zoom:
             cur = cur.persist()
         levels.append(cur)
     out = levels[0]

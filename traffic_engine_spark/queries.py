@@ -2,6 +2,11 @@
 SURVEY.md §2 (+ the training-data family) as a (spark, sf_dir) → DataFrame
 callable with a matching DuckDB-runnable ANSI-SQL oracle.
 
+Each entry builds its Spark side from the engine operator it exercises
+(plans/, operators/, functions/), never from an inline copy of it, so the
+oracle gate checks the code the engine runs; the SQL stays an independent
+spelling of the same semantics.
+
 Conventions that make the oracle comparison exact:
   * the shared hash is ('0x'||substr(md5(x),1,15))::BIGINT ≡
     conv(substring(md5(x),1,15),16,10) — bit-identical in both engines;
@@ -25,8 +30,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .config import Z_AREA, Z_ITEM
-from .functions.binning import hour_of_week_col, speed_bin_col, week_col
-from .functions.cells import morton_col, tile2lat_col, tile2lon_col, tile_x_col, tile_y_col
+from .functions.cells import (
+    grid_disk_offsets,
+    morton_col,
+    tile2lat_col,
+    tile2lon_col,
+    tile_x_col,
+    tile_y_col,
+)
+from .functions.geodesy import haversine_m_col
 from .functions.text import (
     LANG_PROFILES,
     TOKEN_RE,
@@ -35,10 +47,12 @@ from .functions.text import (
     n_tokens_bpe,
     n_tokens_ws,
     punct_ratio,
+    stopword_count,
     stopword_ratio,
     ws_tokens,
 )
 from .operators import ann, dedup, relational, spatial, trajectory
+from .plans import stats as S
 
 # ---------------------------------------------------------------------------
 # loaders + shared derivations
@@ -262,7 +276,7 @@ def cell_join(spark, sf_dir):
     )
     b_cnt = b.groupBy("cx", "cy").agg(F.count(F.lit(1)).alias("_nb"))
     offsets = F.array(
-        *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+        *[F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy")) for dx, dy in grid_disk_offsets(1)]
     )
     a_cells = a.select("cx", "cy").distinct()
     ring = a_cells.withColumn("o", F.explode(offsets)).select(
@@ -450,23 +464,13 @@ FROM carried WHERE side = 1
 )
 def asof_join(spark, sf_dir):
     """J3-shape as-of join: for each click, the latest purchase by the same
-    user at or before it (union-tag-window plan, one shuffle)."""
+    user at or before it — operators/relational.asof_join (union-tag-window
+    plan, one shuffle; a timestamp tie goes to the largest event_id)."""
     p = _points(spark, sf_dir)
     clicks = p.filter(F.col("event_type") == "click").select("user_id", "ts_ms", "event_id")
     buys = p.filter(F.col("event_type") == "purchase").select("user_id", "ts_ms", "event_id")
-    tagged = clicks.withColumn("side", F.lit(1)).unionByName(
-        buys.withColumn("side", F.lit(0))
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_ms", "side", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    carried = tagged.withColumn(
-        "prev_purchase",
-        F.last(F.when(F.col("side") == 0, F.col("event_id")), ignorenulls=True).over(w),
-    )
-    return carried.filter(F.col("side") == 1).select("event_id", "prev_purchase")
+    carried = relational.asof_join(clicks, buys, on="user_id", left_ts="ts_ms", right_ts="ts_ms")
+    return carried.select("event_id", F.col("event_id_asof").alias("prev_purchase"))
 
 
 @q(
@@ -525,7 +529,8 @@ FROM adm GROUP BY user_id
 )
 def pair_speed(spark, sf_dir):
     """W1 + F5/F6/F7/F8 on oracle-checkable data: per-user lag pairing,
-    stationary/max-gap filters, haversine speed admissibility."""
+    stationary/max-gap filters, haversine speed admissibility
+    (functions/geodesy.haversine_m_col)."""
     p = _points(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts_ms", "event_id")
     pairs = (
@@ -538,20 +543,7 @@ def pair_speed(spark, sf_dir):
             & ((F.col("ts_ms") - F.col("p_ts")) <= F.lit(200_000_000_000))
         )
     )
-    dist = (
-        F.lit(2.0 * 6371008.8)
-        * F.asin(
-            F.sqrt(
-                F.least(
-                    F.lit(1.0),
-                    F.pow(F.sin(F.radians(F.col("lat") - F.col("p_lat")) / 2), 2)
-                    + F.cos(F.radians("p_lat"))
-                    * F.cos(F.radians("lat"))
-                    * F.pow(F.sin(F.radians(F.col("lon") - F.col("p_lon")) / 2), 2),
-                )
-            )
-        )
-    )
+    dist = haversine_m_col(F.col("p_lon"), F.col("p_lat"), F.col("lon"), F.col("lat"))
     adm = pairs.withColumn("dist_m", dist).withColumn(
         "dt_ms", F.col("ts_ms") - F.col("p_ts")
     )
@@ -571,6 +563,17 @@ def pair_speed(spark, sf_dir):
     )
 
 
+def _hist(spark, sf_dir) -> DataFrame:
+    """plans/stats.histograms over pts: event_type is the segment_id,
+    ts_ms the time and min(|value|, 33) the speed (the `hist` CTE)."""
+    samples = _points(spark, sf_dir).select(
+        F.col("event_type").alias("segment_id"),
+        F.col("ts_ms").alias("time"),
+        F.least(F.abs(F.col("value")), F.lit(33.0)).alias("speed"),
+    )
+    return S.histograms(samples)
+
+
 @q(
     "speed_histogram",
     f"""
@@ -582,21 +585,9 @@ GROUP BY 1, 2, 3, 4
 """,
 )
 def speed_histogram(spark, sf_dir):
-    """A2 — the histogram aggregation with the reference's week/hour/speed
-    binning (SegmentStatistics.java:61-131), keyed by event_type."""
-    p = _points(spark, sf_dir).withColumn(
-        "speed", F.least(F.abs(F.col("value")), F.lit(33.0))
-    )
-    return (
-        p.select(
-            F.col("event_type").alias("segment_key"),
-            week_col(F.col("ts_ms")).alias("week"),
-            hour_of_week_col(F.col("ts_ms")).alias("hour_of_week"),
-            speed_bin_col(F.col("speed")).alias("speed_bin"),
-        )
-        .groupBy("segment_key", "week", "hour_of_week", "speed_bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    """A2 — plans/stats.histograms, the reference's week/hour/speed binning
+    (SegmentStatistics.java:61-131), keyed by event_type."""
+    return _hist(spark, sf_dir).withColumnRenamed("segment_id", "segment_key")
 
 
 _HIST_CTE = f"""
@@ -620,20 +611,14 @@ FROM hist GROUP BY segment_key
 """,
 )
 def summary_stats(spark, sf_dir):
-    """A4 — weighted mean + population stddev over histogram bin means
-    (SummaryStatistics.java:69-162)."""
-    hist = speed_histogram(spark, sf_dir)
-    mean_speed = (F.col("speed_bin").cast("double") - 0.5) / 3.6
-    return hist.groupBy("segment_key").agg(
-        F.round(F.sum(mean_speed * F.col("n")) / F.sum("n"), 6).alias("mean_ms"),
-        F.round(
-            F.sqrt(
-                F.sum(mean_speed * mean_speed * F.col("n")) / F.sum("n")
-                - F.pow(F.sum(mean_speed * F.col("n")) / F.sum("n"), F.lit(2.0))
-            ),
-            6,
-        ).alias("stddev_ms"),
-        F.sum("n").alias("count"),
+    """A4 — plans/stats.summary_stats: weighted mean + population stddev
+    over histogram bin means (SummaryStatistics.java:69-162)."""
+    out = S.summary_stats(_hist(spark, sf_dir))
+    return out.select(
+        F.col("segment_id").alias("segment_key"),
+        F.round("mean_ms", 6).alias("mean_ms"),
+        F.round("stddev_ms", 6).alias("stddev_ms"),
+        F.col("count").cast("long").alias("count"),
     )
 
 
@@ -646,11 +631,10 @@ FROM hist GROUP BY segment_key, hour_of_week, speed_bin
 """,
 )
 def rollup_weeks(spark, sf_dir):
-    """A3 — cumulative all-weeks rollup (StatsDataStore.java:164-173)."""
-    return (
-        speed_histogram(spark, sf_dir)
-        .groupBy("segment_key", "hour_of_week", "speed_bin")
-        .agg(F.sum("n").alias("n"))
+    """A3 — plans/stats.cumulative_rollup, the all-weeks rollup
+    (StatsDataStore.java:164-173)."""
+    return S.cumulative_rollup(_hist(spark, sf_dir)).withColumnRenamed(
+        "segment_id", "segment_key"
     )
 
 
@@ -675,10 +659,9 @@ FROM cum GROUP BY segment_key
 def speed_percentiles(spark, sf_dir):
     """Quartiles from histogram rows (the BaselineTile export's percentile
     fields, SURVEY Appendix A) — cumulative sum over speed bins."""
-    from .plans.stats import percentiles_from_histogram
-
-    hist = speed_histogram(spark, sf_dir).withColumnRenamed("segment_key", "segment_id")
-    return percentiles_from_histogram(hist).withColumnRenamed("segment_id", "segment_key")
+    return S.percentiles_from_histogram(_hist(spark, sf_dir)).withColumnRenamed(
+        "segment_id", "segment_key"
+    )
 
 
 @q(
@@ -701,10 +684,7 @@ FROM wtd GROUP BY segment_key, hour_of_week
 def summary_stats_hourly(spark, sf_dir):
     """A4/A5's hour-filter + per-hour keys + normalize branches
     (SummaryStatistics.java:46-50 weight n/count(segment))."""
-    from .plans.stats import summary_stats as SS
-
-    hist = speed_histogram(spark, sf_dir).withColumnRenamed("segment_key", "segment_id")
-    out = SS(hist, by_hour=True, hours=[32, 33, 34], normalize=True)
+    out = S.summary_stats(_hist(spark, sf_dir), by_hour=True, hours=[32, 33, 34], normalize=True)
     return out.select(
         F.col("segment_id").alias("segment_key"), "hour_of_week",
         F.round("count", 6).alias("count"),
@@ -731,34 +711,30 @@ FROM a, b
 """,
 )
 def welch_ttest(spark, sf_dir):
-    """A7 — Welch t-test comparison (SummaryStatisticsComparison.java:19-244,
-    with the stats1/stats2 bugs fixed; quirk variant in plans/stats.py)."""
-    p = _points(spark, sf_dir)
+    """A7 — plans/stats.welch_t_test (SummaryStatisticsComparison.java:
+    19-244, with the stats1/stats2 bug fixed) on the per-type (count, mean,
+    stddev_pop) of click vs view values, as one constant-keyed row each."""
     g = (
-        p.filter(F.col("event_type").isin("click", "view"))
+        _points(spark, sf_dir)
+        .filter(F.col("event_type").isin("click", "view"))
         .groupBy("event_type")
         .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("value").alias("mean"),
-            F.stddev_pop("value").alias("sd"),
+            F.count(F.lit(1)).alias("count"),
+            F.avg("value").alias("mean_ms"),
+            F.stddev_pop("value").alias("stddev_ms"),
         )
+        .withColumn("segment_id", F.lit(0))
     )
-    a = g.filter(F.col("event_type") == "click").alias("a")
-    b = g.filter(F.col("event_type") == "view").alias("b")
-    v1 = F.col("a.sd") * F.col("a.sd") / F.col("a.n")
-    v2 = F.col("b.sd") * F.col("b.sd") / F.col("b.n")
-    return a.crossJoin(b).select(
-        F.round(F.col("a.mean") - F.col("b.mean"), 6).alias("mean_diff"),
-        F.round(F.sqrt(v1 + v2), 6).alias("combined_stddev"),
-        F.round((F.col("a.mean") - F.col("b.mean")) / F.sqrt(v1 + v2), 6).alias("t_stat"),
-        F.round(
-            F.pow(v1 + v2, F.lit(2.0))
-            / (
-                F.pow(v1, F.lit(2.0)) / (F.col("a.n") - 1)
-                + F.pow(v2, F.lit(2.0)) / (F.col("b.n") - 1)
-            ),
-            4,
-        ).alias("df"),
+    t = S.welch_t_test(
+        g.filter(F.col("event_type") == "click"),
+        g.filter(F.col("event_type") == "view"),
+        strict_parity=False,
+    )
+    return t.select(
+        F.round("mean_diff", 6).alias("mean_diff"),
+        F.round("combined_stddev", 6).alias("combined_stddev"),
+        F.round("t_stat", 6).alias("t_stat"),
+        F.round("df", 4).alias("df"),
     )
 
 
@@ -774,27 +750,22 @@ GROUP BY t.ax, t.ay
 """,
 )
 def anonymity_gate_q(spark, sf_dir):
-    """W3 — the k-anonymity cell gate (VehicleStates.java:19,188-227):
-    cells observed by < MINIMUM_VEHICLE_COUNT distinct traces are dropped
-    via a count-distinct semi-join (exact, deterministic)."""
-    p = _points(spark, sf_dir)
-    tiled = p.select(
-        "event_id", "user_id",
-        tile_x_col(F.col("lon"), 16).alias("ax"),
-        tile_y_col(F.col("lat"), 16).alias("ay"),
-    )
-    ok = (
-        tiled.groupBy("ax", "ay")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .filter(F.col("n") >= 10)
-        .select("ax", "ay")
-    )
+    """W3 — plans/match.anonymity_gate, the k-anonymity cell gate
+    (VehicleStates.java:19,188-227), at z16 with 10 users as the traces:
+    cells observed by < 10 distinct users are dropped (exact,
+    deterministic); the survivors are counted per tile."""
+    from .plans.match import anonymity_gate
+
+    fixes = _points(spark, sf_dir).select(F.col("user_id").alias("trace_id"), "lat", "lon")
     return (
-        tiled.join(F.broadcast(ok), ["ax", "ay"], "left_semi")
-        .groupBy(F.col("ax").alias("tile_x"), F.col("ay").alias("tile_y"))
+        anonymity_gate(fixes, min_vehicles=10, zoom=16)
+        .groupBy(
+            tile_x_col(F.col("lon"), 16).alias("tile_x"),
+            tile_y_col(F.col("lat"), 16).alias("tile_y"),
+        )
         .agg(
             F.count(F.lit(1)).alias("n_points"),
-            F.countDistinct("user_id").alias("n_users"),
+            F.countDistinct("trace_id").alias("n_users"),
         )
     )
 
@@ -1205,8 +1176,6 @@ FROM typed GROUP BY street_type
 def type_stats_q(spark, sf_dir):
     """A6 — TypeStatistics (data/stats/TypeStatistics.java:7-48) over an
     oracle-checkable street_type derivation."""
-    from .plans import stats as S
-
     typed = _points(spark, sf_dir).select(
         (F.col("event_id") % 5).cast("int").alias("street_type"),
         F.col("value").alias("speed"),
@@ -1355,10 +1324,6 @@ def ann_lsh_buckets(spark, sf_dir):
 
 
 def _sql_lang_case() -> str:
-    score = {
-        lang: f"len(list_intersect(toks, {words!r}))".replace("'", "'")
-        for lang, words in LANG_PROFILES.items()
-    }
     scores_sql = {
         lang: "len(list_filter(toks, t -> t IN (" + ",".join(f"'{w}'" for w in words) + ")))"
         for lang, words in LANG_PROFILES.items()
@@ -1387,8 +1352,7 @@ def text_langid(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     toks = ws_tokens(F.col("text"))
     scores = {
-        lang: F.size(F.filter(toks, lambda t: t.isin(words)))
-        for lang, words in sorted(LANG_PROFILES.items())
+        lang: stopword_count(toks, words) for lang, words in sorted(LANG_PROFILES.items())
     }
     best = F.greatest(*scores.values())
     pred = F.lit(None).cast("string")
@@ -2189,8 +2153,6 @@ def traffic_offmap_traces(spark, sf_dir):
 
 @q("traffic_histograms", None)
 def traffic_histograms(spark, sf_dir):
-    from .plans import stats as S
-
     return S.histograms(_pipeline(spark)[5])
 
 
