@@ -43,17 +43,8 @@ VEHICLE_INVALIDATION_TIME_MS = 5 * 60 * 1000  # state TTL (VehicleStates.java:18
 HOURS_IN_WEEK = 7 * 24                       # (data/stats/SegmentStatistics.java:17)
 WEEK_OFFSET_MS = 24 * 60 * 60 * 1000 * 4     # epoch(Thu)→Monday (SegmentStatistics.java:18)
 WEEK_MS = 7 * 24 * 60 * 60 * 1000
-SPEED_BIN_SIZE_KMH = 1.0                     # (SegmentStatistics.java:19)
-MAX_TRACKED_SPEED_KMH = 120.0                # (SegmentStatistics.java:20)
 NUM_SPEED_BINS = 120                         # ceil(120/1)    (SegmentStatistics.java:21)
 SEC_TO_MS_THRESHOLD = 15_000_000_000         # (geom/GPSPoint.java:28)
-
-# --- ids -------------------------------------------------------------------
-# The reference allocates ids from a persistent counter starting at 1e9
-# (data/stores/IdStore.java:13).  Counter ids are not stable under
-# parallelism, so this engine derives ids from the md5 of the logical key
-# (15 hex digits → 60-bit positive int64); see functions/ids.py.
-ID_COUNTER_START = 1_000_000_000
 
 # --- geodesy ---------------------------------------------------------------
 # The reference uses geotools GeodeticCalculator (WGS84 ellipsoid, Vincenty,

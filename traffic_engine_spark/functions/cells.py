@@ -203,10 +203,6 @@ def morton_col(x: Column, y: Column) -> Column:
     return _spread_bits_col(x).bitwiseOR(F.shiftleft(_spread_bits_col(y), 1))
 
 
-def morton_of_col(lat: Column, lon: Column, zoom: int = Z_ITEM) -> Column:
-    return morton_col(tile_x_col(lon, zoom), tile_y_col(lat, zoom))
-
-
 # ---------------------------------------------------------------------------
 # grid_disk ring + bbox cover — candidate generation for the J1 join
 # ---------------------------------------------------------------------------

@@ -1,9 +1,10 @@
 """Deterministic 60-bit ids from logical keys.
 
-The reference allocates ids from a persistent counter (data/stores/
-IdStore.java:13,30-35) — unstable under parallelism.  This engine derives
-ids as ``int(md5(key)[:15 hex], 16)`` (60 bits, positive int64), so ids are
-identical across runs, partitionings and cluster sizes (SURVEY §7.4.4).
+The reference allocates ids from a persistent counter starting at 1e9
+(data/stores/IdStore.java:13,30-35) — unstable under parallelism.  This
+engine derives ids as ``int(md5(key)[:15 hex], 16)`` (60 bits, positive
+int64), so ids are identical across runs, partitionings and cluster
+sizes (SURVEY §7.4.4).
 
 Key strings follow the reference's own string forms (C14):
   * street segment: "ss_{wayId}:{startNodeId}-{endNodeId}"  (StreetSegment.java:82-84)

@@ -1,11 +1,8 @@
-"""Export sinks (S5/S6 recast): GeoJSON for segment geometries and the
-per-tile stats export layout.
+"""Export sink (S6 recast): GeoJSON for segment geometries.
 
 The reference's shapefile writer (osm/OSMUtils.java:50-100) becomes a
-GeoJSON writer (same information: LineString EPSG:4326 + attributes); its
-protobuf BaselineTile sink (dead code in the reference,
-OSMDataStore.java:442-473) becomes parquet partitioned by (tile) — the
-schema in SURVEY Appendix A maps 1:1 onto `stats.summary_stats` columns.
+GeoJSON writer (same information: LineString EPSG:4326 + attributes).
+The S5 BaselineTile stats sink is ``sources/pbf.export_baseline_tiles_pbf``.
 """
 
 from __future__ import annotations
@@ -169,13 +166,3 @@ def segments_to_geojson_files(
         .text(path)
     )
 
-
-def export_baseline_tiles(summary: DataFrame, hist: DataFrame, path: str):
-    """S5 — the BaselineTile export (SURVEY Appendix A) as parquet
-    partitioned by week: per segment, overall + per-hour means; quartiles
-    come from `stats.percentiles_from_histogram`."""
-    from ..plans.stats import percentiles_from_histogram
-
-    q = percentiles_from_histogram(hist)
-    out = summary.join(q, "segment_id", "left")
-    out.write.mode("overwrite").parquet(path)

@@ -17,7 +17,7 @@ Two rewrite shapes, selected by ``cluster``:
   shuffle): each output task concatenates whole input splits.  This is
   Iceberg's ``rewrite_data_files(strategy => 'binpack')``.
 * ``cluster=("lat", "lon")`` — spatial clustering.  One range-exchange
-  on the Morton/Z-order key (``functions.cells.morton_of_col``), sorted
+  on the Morton/Z-order key (``functions.cells.morton_col``), sorted
   within partitions, so every output file owns a DISJOINT Morton range.
   Parquet min/max column stats on the kept key column then let any
   cell-range predicate (J1's packed-cell probes, tile queries) skip

@@ -1,30 +1,26 @@
-"""Iceberg-shaped table store on plain parquet snapshots.
+"""MERGE-sum snapshot store with time travel and replay-safe op ids.
 
-BASELINE.json specifies Iceberg tables; the sandbox has no Iceberg runtime
-jar, so this module reproduces the three Iceberg behaviours the engine
-relies on, storage-format-agnostically:
+The reference persists one mutable aggregate: StatsDataStore.save adds
+the incoming histogram counts to the stored ones
+(StatsDataStore.java:140-162).  ``SnapshotStore.merge_sum`` is that
+upsert on plain parquet, shaped like an Iceberg table:
 
-  * MERGE-upsert dedupe on a logical key — the reference's
-    StreetDataStore.save insert-if-absent semantics
-    (data/stores/StreetDataStore.java:35-44: an existing segmentIndex key
-    wins, the new row is dropped);
-  * numbered snapshots with a JSON metadata log (snapshot id, parent,
-    operation, row deltas) — the shape of Iceberg's metadata tree;
-  * snapshot-pinned reads (time travel) so a resumed pipeline can re-read
-    the exact table state a checkpoint recorded.
+  * every merge commits a numbered snapshot to a JSON metadata log
+    (snapshot id, parent, operation, row deltas), swapped in atomically;
+  * ``read(snapshot_id)`` is a snapshot-pinned read (``VERSION AS OF``),
+    so the log shows the running accumulation;
+  * an ``op_id`` recorded in the log makes a re-delivered merge a no-op
+    (the foreachBatch at-least-once contract).
 
-On a real cluster, swap `_write_snapshot`/`read` for `df.writeTo(...).
-append()` / `VERSION AS OF` and the semantics carry over unchanged
-(MERGE ... WHEN NOT MATCHED THEN INSERT).  Each snapshot here rewrites the
-full table — fine for dimension-sized stores (the street network); fact
-tables use the append path.
+Each snapshot rewrites the full table; at fact-table scale, partition
+the store by week (the reference's own store key) or use a catalog
+table's MERGE INTO.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,32 +28,10 @@ from pyspark.sql import functions as F
 
 
 class SnapshotStore:
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key_cols: list[str],
-        table: str | None = None,
-    ):
+    def __init__(self, spark: SparkSession, path: str, key_cols: list[str]):
         self.spark = spark
         self.path = path
         self.key_cols = list(key_cols)
-        # real-Iceberg branch (VERDICT r4 #7): pass a catalog table name
-        # and, when the session's JVM has the Iceberg runtime, every write
-        # becomes the canonical Iceberg SQL (sources/iceberg.py) — the
-        # parquet-snapshot machinery below is the fallback, so the same
-        # call site runs unchanged on a real cluster and in this sandbox.
-        # NOTE the iceberg-backend return contract is reduced: write
-        # methods return {"operation", "backend"} only (replay skips
-        # surface as operation == "merge-sum-replay-skip"); snapshot ids
-        # / row deltas live in Iceberg's own metadata tables
-        # (backend.snapshots()), not in the returned dict.
-        self.iceberg = None
-        if table is not None:
-            from .iceberg import IcebergStoreBackend, iceberg_catalog_available
-
-            if iceberg_catalog_available(spark):
-                self.iceberg = IcebergStoreBackend(spark, table, key_cols)
         os.makedirs(path, exist_ok=True)
         self.meta_path = os.path.join(path, "metadata.json")
         # op_id replay index: loaded from the snapshot log once, then kept
@@ -106,24 +80,15 @@ class SnapshotStore:
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
         """Current table state, or `VERSION AS OF snapshot_id` time travel."""
-        if self.iceberg is not None:
-            return self.iceberg.read(snapshot_id)
         sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
         if sid is None:
             raise ValueError(f"store {self.path} has no snapshots")
-        for s in self.snapshots():
-            if s["snapshot_id"] == sid and s.get("expired"):
-                raise ValueError(
-                    f"snapshot {sid} of store {self.path} was expired by "
-                    f"expire_snapshots; time travel to it is no longer "
-                    f"possible (Iceberg raises the same way)"
-                )
         return self.spark.read.parquet(self._snap_dir(sid))
 
     # -- writes ---------------------------------------------------------------
 
     def _write_snapshot(
-        self, df: DataFrame, operation: str, added: int, op_id: str | None = None
+        self, df: DataFrame, added: int, op_id: str | None = None
     ) -> dict:
         parent = self.current_snapshot_id()
         sid = 0 if parent is None else parent + 1
@@ -131,7 +96,7 @@ class SnapshotStore:
         df.write.mode("overwrite").parquet(out)
         total = self.spark.read.parquet(out).count()
         entry = {
-            "snapshot_id": sid, "parent": parent, "operation": operation,
+            "snapshot_id": sid, "parent": parent, "operation": "merge-sum",
             "added_rows": int(added), "total_rows": int(total),
             "key": self.key_cols, "ts": time.time(),
         }
@@ -140,64 +105,22 @@ class SnapshotStore:
         self._commit(entry)
         return entry
 
-    def overwrite(self, df: DataFrame) -> dict:
-        if self.iceberg is not None:
-            self.iceberg.overwrite(df)
-            return {"operation": "overwrite", "backend": "iceberg"}
-        return self._write_snapshot(df, "overwrite", df.count())
-
-    def merge_insert_if_absent(self, df: DataFrame) -> dict:
-        """MERGE ... WHEN NOT MATCHED THEN INSERT on the logical key — the
-        StreetDataStore.save dedupe: rows whose key already exists are
-        DROPPED (the stored row wins), new keys are inserted exactly once
-        (within-batch duplicates keep the first in deterministic key
-        order).  A no-change merge commits no snapshot (Iceberg behaviour)."""
-        if self.iceberg is not None:
-            self.iceberg.merge_insert_if_absent(df)
-            return {"operation": "merge", "backend": "iceberg"}
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*self.key_cols).orderBy(*df.columns)
-        batch = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if self.current_snapshot_id() is None:
-            return self._write_snapshot(batch, "merge", batch.count())
-        existing = self.read()
-        fresh = batch.join(
-            existing.select(*self.key_cols), self.key_cols, "left_anti"
-        )
-        added = fresh.count()
-        if added == 0:
-            snaps = self.snapshots()
-            return {**snaps[-1], "operation": "merge-noop", "added_rows": 0}
-        return self._write_snapshot(
-            existing.unionByName(fresh), "merge", added
-        )
-
     def merge_sum(
         self, df: DataFrame, sum_cols: list[str], op_id: str | None = None
     ) -> dict:
         """MERGE accumulate: matched keys ADD ``sum_cols``, unmatched
         insert — the reference's histogram upsert (StatsDataStore.save
         reads the stored SegmentStatistics for (segmentId, week) and adds
-        the incoming counts, StatsDataStore.java:140-162).  On Iceberg:
-        MERGE ... WHEN MATCHED THEN UPDATE SET n = t.n + s.n WHEN NOT
-        MATCHED THEN INSERT — which rewrites only the touched data files;
-        this parquet stand-in rewrites the whole table per commit, so at
-        fact-table scale partition the store by week (the reference's own
-        store key) or swap in the real MERGE.  Empty increments commit
-        nothing.
+        the incoming counts, StatsDataStore.java:140-162); on a catalog
+        table, MERGE ... WHEN MATCHED THEN UPDATE SET n = t.n + s.n WHEN
+        NOT MATCHED THEN INSERT.  Empty increments commit nothing.
 
         ``op_id`` makes the merge IDEMPOTENT under at-least-once replay
         (the foreachBatch contract: a microbatch can be re-delivered after
         a crash between the store commit and the streaming checkpoint
         commit): an op_id already present in the snapshot log is skipped
         — the increments are NOT double-applied — and the recorded entry
-        is returned.  Iceberg twin: write the batch id as a snapshot
-        summary property and check it before the MERGE."""
+        is returned."""
         expected = set(self.key_cols) | set(sum_cols)
         if set(df.columns) != expected:
             # the groupBy/agg below would silently project away any other
@@ -206,13 +129,6 @@ class SnapshotStore:
                 f"merge_sum input columns {sorted(df.columns)} must be "
                 f"exactly key_cols + sum_cols = {sorted(expected)}"
             )
-        if self.iceberg is not None:
-            applied = self.iceberg.merge_sum(df, sum_cols, op_id)
-            return {
-                "operation": "merge-sum" if applied is not None
-                else "merge-sum-replay-skip",
-                "backend": "iceberg",
-            }
         if op_id is not None and self._op_id_seen(op_id):
             for snap in self.snapshots():
                 if snap.get("op_id") == op_id:
@@ -229,7 +145,7 @@ class SnapshotStore:
             last = snaps[-1] if snaps else {"snapshot_id": None}
             return {**last, "operation": "merge-sum-noop", "added_rows": 0}
         if self.current_snapshot_id() is None:
-            return self._write_snapshot(agg, "merge-sum", agg.count(), op_id)
+            return self._write_snapshot(agg, agg.count(), op_id)
         existing = self.read()
         added = agg.join(
             existing.select(*self.key_cols), self.key_cols, "left_anti"
@@ -239,152 +155,4 @@ class SnapshotStore:
             .groupBy(*self.key_cols)
             .agg(*[F.sum(c).alias(c) for c in sum_cols])
         )
-        return self._write_snapshot(merged, "merge-sum", added, op_id)
-
-    # -- lifecycle (expire_snapshots / remove_orphan_files / changelog) -------
-
-    def _rewrite_log(self, snaps: list[dict]) -> None:
-        tmp = self.meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(snaps, f, indent=1)
-        os.replace(tmp, self.meta_path)
-
-    def expire_snapshots(
-        self, retain_last: int = 1, older_than_ts: float | None = None
-    ) -> dict:
-        """Iceberg ``expire_snapshots`` twin: delete the DATA of old
-        snapshots so an append-heavy store doesn't retain every historical
-        table copy forever — at 10^12-row scale snapshot retention, not
-        the live table, dominates storage growth.
-
-        The newest ``retain_last`` snapshots are always kept (the current
-        one can never expire); with ``older_than_ts`` only snapshots
-        strictly older than it are eligible.  One deliberate deviation
-        from Iceberg: the log entry is kept and tombstoned
-        (``"expired": true``) instead of being dropped, so lineage and —
-        critically — the ``op_id`` replay index survive expiry: a
-        re-delivered microbatch whose merge-sum snapshot was expired is
-        still skipped, not double-applied.  Time travel to an expired id
-        raises, exactly as Iceberg does."""
-        if self.iceberg is not None:
-            self.iceberg.expire_snapshots(retain_last, older_than_ts)
-            return {"operation": "expire-snapshots", "backend": "iceberg"}
-        if retain_last < 1:
-            raise ValueError(
-                "retain_last must be >= 1: the current snapshot is never expired"
-            )
-        snaps = self.snapshots()
-        keep = {s["snapshot_id"] for s in snaps[-retain_last:]}
-        expired, freed = [], 0
-        for s in snaps:
-            if s["snapshot_id"] in keep or s.get("expired"):
-                continue
-            if older_than_ts is not None and s["ts"] >= older_than_ts:
-                continue
-            d = self._snap_dir(s["snapshot_id"])
-            freed += _tree_bytes(d)
-            shutil.rmtree(d, ignore_errors=True)
-            s["expired"] = True
-            expired.append(s["snapshot_id"])
-        if expired:
-            self._rewrite_log(snaps)
-        return {
-            "operation": "expire-snapshots",
-            "expired": expired,
-            "retained": sorted(
-                s["snapshot_id"] for s in snaps if not s.get("expired")
-            ),
-            "freed_bytes": freed,
-        }
-
-    def remove_orphan_files(self) -> dict:
-        """Iceberg ``remove_orphan_files`` twin: delete ``snap-*``
-        directories under the store path that no live log entry
-        references — the debris a writer leaves when it crashes between
-        the parquet write and the metadata pointer swap (the write-side
-        window _write_snapshot's atomic os.replace protects readers from,
-        but which still leaks the data files)."""
-        if self.iceberg is not None:
-            self.iceberg.remove_orphan_files()
-            return {"operation": "remove-orphan-files", "backend": "iceberg"}
-        live = {
-            f"snap-{s['snapshot_id']:06d}"
-            for s in self.snapshots()
-            if not s.get("expired")
-        }
-        removed, freed = [], 0
-        for name in sorted(os.listdir(self.path)):
-            p = os.path.join(self.path, name)
-            if name.startswith("snap-") and os.path.isdir(p) and name not in live:
-                freed += _tree_bytes(p)
-                shutil.rmtree(p, ignore_errors=True)
-                removed.append(name)
-        return {
-            "operation": "remove-orphan-files",
-            "removed": removed,
-            "freed_bytes": freed,
-        }
-
-    def changes(
-        self, start_snapshot_id: int, end_snapshot_id: int | None = None
-    ) -> DataFrame:
-        """Incremental changelog read between two snapshots — the Iceberg
-        CDC / ``create_changelog_view`` shape: every row is tagged
-        ``_change_type`` in {insert, delete, update_preimage,
-        update_postimage}, diffed on the store's logical key.  This is
-        what lets a downstream consumer of a 10^12-row store process ONLY
-        the delta of a commit instead of rescanning the table: at planet
-        scale the full-table re-read, not the merge, is what incremental
-        pipelines must avoid.
-
-        Derived as three key-joins of the two pinned versions (two
-        anti-joins for insert/delete, one null-safe value-struct compare
-        for updates), so it works on the parquet fallback with no extra
-        state; on real Iceberg the backend delegates to the engine's own
-        changelog scan, which reads just the touched data files."""
-        if self.iceberg is not None:
-            return self.iceberg.changes(start_snapshot_id, end_snapshot_id)
-        end = (
-            self.current_snapshot_id()
-            if end_snapshot_id is None
-            else end_snapshot_id
-        )
-        old = self.read(start_snapshot_id)
-        key = self.key_cols
-        tagged = lambda df, tag: df.select(  # noqa: E731
-            *old.columns, F.lit(tag).alias("_change_type")
-        )
-        if end == start_snapshot_id:
-            return tagged(old, "insert").limit(0)
-        new = self.read(end)
-        val_cols = [c for c in old.columns if c not in key]
-        inserts = tagged(new.join(old.select(key), key, "left_anti"), "insert")
-        deletes = tagged(old.join(new.select(key), key, "left_anti"), "delete")
-        if not val_cols:
-            return inserts.unionByName(deletes)
-        o_val = F.struct(*[F.col(f"o.{c}") for c in val_cols])
-        n_val = F.struct(*[F.col(f"n.{c}") for c in val_cols])
-        changed_keys = (
-            old.alias("o")
-            .join(new.alias("n"), key)
-            .filter(~o_val.eqNullSafe(n_val))
-            .select(*key)
-        )
-        pre = tagged(
-            old.join(changed_keys, key, "left_semi"), "update_preimage"
-        )
-        post = tagged(
-            new.join(changed_keys, key, "left_semi"), "update_postimage"
-        )
-        return inserts.unionByName(deletes).unionByName(pre).unionByName(post)
-
-
-def _tree_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
+        return self._write_snapshot(merged, added, op_id)
